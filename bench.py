@@ -97,17 +97,29 @@ def _run_true_cold(sf_dir: str, shuffle: int) -> "dict[str, float] | None":
             "SPARK_GRAFT_SHUFFLE": str(shuffle),
         }
     )
+    proc = None
     try:
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--true-cold-child"],
             env=env,
             stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
+            stderr=subprocess.PIPE,
             timeout=1800,
         )
+        proc.check_returncode()
         line = proc.stdout.decode().strip().splitlines()[-1]
         return {k: float(v) for k, v in json.loads(line).items()}
-    except Exception:
+    except Exception as exc:
+        # One warning line: the regime is left out of the payload, but
+        # never silently (the child's last stderr line names its error).
+        rc = proc.returncode if proc is not None else None
+        err = (proc.stderr if proc is not None else getattr(exc, "stderr", None)) or b""
+        last = err.decode(errors="replace").strip().splitlines()[-1:]
+        print(
+            f"bench.py: warning: true-cold regime dropped (returncode={rc}): "
+            f"{exc!r}" + (f"; child stderr: {last[0]}" if last else ""),
+            file=sys.stderr,
+        )
         return None
 
 

@@ -167,8 +167,9 @@ def group_minhash_signatures(
 ) -> DataFrame:
     """The |groups|-row (id, gsig) group-level MinHash signature
     aggregate of ``group_minhash_overlap`` -- split out (ADVICE r12) so
-    a serving caller can checkpoint it ONCE per corpus fingerprint in a
-    registry (with displaced-entry eviction) instead of this module
+    a serving caller can checkpoint it ONCE per corpus fingerprint in
+    the serving-state store (which releases displaced generations)
+    instead of this module
     eagerly checkpointing an untracked block per call."""
     from .dedup import minhash_signatures_wide
 
@@ -217,12 +218,22 @@ def group_minhash_overlap(
     checkpointed once per corpus fingerprint by the caller's registry,
     ADVICE r12). When omitted, a PER-RUN eager localCheckpoint keeps
     the corpus pass single (both join sides reference it); the block is
-    freed by the ContextCleaner when the returned plan is dropped.
+    freed by the ContextCleaner when the returned plan is dropped. A
+    prepared frame whose signatures are not ``num_perm`` long fails the
+    query when it runs (checked in-plan, no extra job) instead of
+    zipping unequal arrays into a skewed estimate.
     """
     if gsig is None:
         gsig = group_minhash_signatures(
             df, group_col, text_col, num_perm, shingle_n
         ).localCheckpoint(eager=True)
+    else:
+        gsig = gsig.withColumn(
+            "gsig",
+            F.when(F.size("gsig") == num_perm, F.col("gsig")).otherwise(
+                F.raise_error(F.lit(f"gsig signatures are not num_perm={num_perm} long"))
+            ),
+        )
     a = gsig.select(F.col("id").alias("src_a"), F.col("gsig").alias("_sa"))
     b = gsig.select(F.col("id").alias("src_b"), F.col("gsig").alias("_sb"))
     # 1L literals keep the fold LongType -- the dtype the old

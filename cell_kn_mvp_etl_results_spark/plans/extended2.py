@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import store
 from ..operators import dedup as dd
 from ..sources.readers import read_table
 from .registry import REGISTRY, TAIL, query
@@ -73,13 +74,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Checkpointed delta band frames keyed on (applicationId, sf_dir,
-# corpus fingerprint) -- data-not-plan memoization (see the comment in
-# pair_index_upsert_pairs). Fingerprint keying means a regenerated
-# corpus can never serve stale bands.
-_UPSERT_DELTA_BANDS: dict[tuple, DataFrame] = {}
-
-
 def pair_index_upsert_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MAINTENANCE of the near-dup pair graph -- the IVM
     statement for the dedup layer's materialized tables: when a delta
@@ -103,8 +97,6 @@ def pair_index_upsert_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .materialized import simhash_band_index_frame
 
-    from ..sources.readers import _fingerprint
-
     d = read_table(spark, sf_dir, "documents")
     # The delta's band frame is consumed THREE times below (base probe
     # + both sides of the delta self-join); un-checkpointed, each
@@ -116,30 +108,16 @@ def pair_index_upsert_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus fingerprint like q_cosine_topk's query matrix; the tiny
     # pinned relation also gives the planner exact stats, so both
     # probe joins pick broadcast on their own.
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _fingerprint(f"{sf_dir}/documents.parquet"),
-    )
-    bands_delta = _UPSERT_DELTA_BANDS.get(key)
-    if bands_delta is None:
-        # Evict the displaced fingerprint's checkpointed frame first
-        # (ADVICE r9): dropping the reference lets the ContextCleaner
-        # free the localCheckpoint blocks; unpersist is a best-effort
-        # nudge for the CacheManager side.
-        from ..sources.readers import evict_where
-
-        evict_where(
-            _UPSERT_DELTA_BANDS,
-            lambda k: k[:2] == key[:2],
-            lambda v: v.unpersist(),
-        )
+    # One store entry per application and documents fingerprint; a
+    # displaced entry's checkpoint blocks are released.
+    def build(e) -> DataFrame:
         delta = d.filter(F.col("doc_id") % 10 == 0)
         h_delta = dd.simhash(delta, "doc_id", "text", bits=32)
-        bands_delta = dd.simhash_bands(h_delta, bands=2, bits=32).localCheckpoint(
-            eager=True
-        )
-        _UPSERT_DELTA_BANDS[key] = bands_delta
+        return e.checkpoint(dd.simhash_bands(h_delta, bands=2, bits=32))
+
+    bands_delta = store.get(
+        spark.sparkContext, sf_dir, "upsert_bands", build, tables=("documents",)
+    )
     base_idx = simhash_band_index_frame(spark, sf_dir, base_mod=10)
     hamming = F.bit_count(F.col("sh_x").bitwiseXOR(F.col("sh_y")))
     dl = bands_delta.select(

@@ -10,9 +10,12 @@ Corpus: the ``documents`` (doc_id, text, lang, source, n_chars) and
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators import dedup as dd
 from ..operators import packing as pk
 from ..operators import similarity as sim
@@ -172,15 +175,6 @@ ORDER BY id_a, id_b
 MINHASH_NUM_PERM = 32
 MINHASH_BANDS = 8
 
-# Fingerprint-keyed registry of the persisted wide-signature temp view
-# (id, sig array<long>[32]) -- the minhash analogue of graph_queries.
-# _HOP_FRAMES: the signature computation (scan + Arrow matrix fold) is
-# steady-state state built once per corpus fingerprint; every
-# q_dedup_minhash_lsh call then constructs its plan as ONE spark.sql
-# parse over the view. Holding the DataFrame reference pins the
-# persisted signatures for the application's lifetime.
-_MINHASH_SIG_VIEWS: dict[tuple, tuple] = {}
-
 
 def _minhash_sigs_view(spark: SparkSession, sf_dir: str) -> str:
     return _minhash_views(spark, sf_dir)[0]
@@ -198,78 +192,47 @@ def _minhash_views(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     dedup service keeps, not per-query logic (the lake posture
     literally persists them: materialized.minhash_index_frame /
     simhash_pairs_frame)."""
-    from ..sources.readers import _fingerprint
-    from .materialized import materialize_enabled
-
-    fp = _fingerprint(f"{sf_dir}/documents.parquet")
-    from ..sources.readers import evict_where
-
-    def _drop(v):
-        v[0].unpersist()
-        v[4].unpersist()
-        for old_name in v[1:4]:
-            spark.catalog.dropTempView(old_name)
-
-    if not materialize_enabled():
-        # Escape hatch (VERDICT r12 #1): SPARK_GRAFT_MATERIALIZE=0 must
-        # cover the headliner too -- evict any pinned entry for this
-        # scope and register the SAME three views freshly, WITHOUT
-        # memoizing, so every call recomputes signatures, banding and
-        # candidate pairs from the parquet input. The persists inside
-        # _register_minhash_views are then PER-RUN state (the same
-        # posture as operators/dedup.minhash_lsh_pairs' in-call sigs
-        # persist -- without them one statement would re-execute the
-        # signature pipeline once per view reference, ~5x); nothing is
-        # reused across calls, and the displaced frames are freed by
-        # the ContextCleaner when the replaced views drop the last
-        # reference. Identical SQL text -> identical rows.
-        evict_where(
-            _MINHASH_SIG_VIEWS, lambda k: k[:2] == (spark, sf_dir), _drop
-        )
-        return _register_minhash_views(spark, sf_dir, fp)[1:4]
-    # session object, not applicationId: view names are session-scoped
-    key = (spark, sf_dir, fp)
-    hit = _MINHASH_SIG_VIEWS.get(key)
-    if hit is None:
-        # Unpersist the displaced fingerprint's signatures and drop its
-        # views before pinning fresh ones (VERDICT r9 #3): the old entry
-        # held a persisted frame alive for the application's lifetime.
-        evict_where(
-            _MINHASH_SIG_VIEWS, lambda k: k[:2] == (spark, sf_dir), _drop
-        )
-        entry = _register_minhash_views(spark, sf_dir, fp)
-        _MINHASH_SIG_VIEWS[key] = entry
-        return entry[1:4]
-    return hit[1], hit[2], hit[3]
+    # Steady-state serving state, one store entry per session and
+    # documents fingerprint (session object, not applicationId: view
+    # names are session-scoped). With SPARK_GRAFT_MATERIALIZE=0 every
+    # call rebuilds the same three views from the parquet input, and the
+    # store releases the previous call's persisted frames and views
+    # first. Identical SQL text -> identical rows.
+    return store.get(
+        spark,
+        sf_dir,
+        "minhash",
+        functools.partial(_register_minhash_views, spark, sf_dir),
+        tables=("documents",),
+    )
 
 
 def _register_minhash_views(
-    spark: SparkSession, sf_dir: str, fp: tuple
-) -> tuple:
+    spark: SparkSession, sf_dir: str, e
+) -> tuple[str, str, str]:
     """Build + register the three minhash views (signatures, banded
-    buckets, candidate pairs). The signature and candidate-pair frames
-    are persisted -- steady-state serving state when the caller
-    memoizes the returned entry, plain per-run shared subtrees when it
-    does not (the materialize=0 path)."""
+    buckets, candidate pairs) in store entry ``e``. The signature and
+    candidate-pair frames are persisted: without them one statement
+    would re-execute the signature pipeline once per view reference."""
     import hashlib
 
     d = read_table(spark, sf_dir, "documents")
-    sigs = dd.minhash_signatures_wide(
-        d, "doc_id", "text", num_perm=MINHASH_NUM_PERM
-    ).persist()
-    tag = hashlib.md5(repr((sf_dir, fp)).encode()).hexdigest()[:8]
-    name = f"minhash_sigs_{tag}"
-    sigs.createOrReplaceTempView(name)
+    sigs = e.persist(
+        dd.minhash_signatures_wide(d, "doc_id", "text", num_perm=MINHASH_NUM_PERM)
+    )
+    tag = hashlib.md5(repr((sf_dir, e.fps[0])).encode()).hexdigest()[:8]
+    name = e.view(sigs, f"minhash_sigs_{tag}")
     structs = dd.band_structs_sql(
         num_perm=MINHASH_NUM_PERM, bands=MINHASH_BANDS
     )
-    bname = f"minhash_buckets_{tag}"
-    spark.sql(f"""
+    bname = e.view(
+        spark.sql(f"""
 SELECT id, t.band, t.bucket
 FROM {name}
 LATERAL VIEW inline(array({structs})) t AS band, bucket
-""").createOrReplaceTempView(bname)
-    cname = f"minhash_cand_{tag}"
+"""),
+        f"minhash_buckets_{tag}",
+    )
     cand = spark.sql(f"""
 SELECT DISTINCT p.id_a, p.id_b FROM (
   SELECT /*+ BROADCAST(big) */ array_sort(collect_set(b.id)) AS ids
@@ -296,9 +259,8 @@ LATERAL VIEW explode(flatten(transform(
     # materialized.minhash_index_frame); pinning it leaves each
     # call only the two signature joins + estimate. Measured
     # 0.635 -> 0.225 s rebuild-regime median.
-    cand.persist()
-    cand.createOrReplaceTempView(cname)
-    return (sigs, name, bname, cname, cand)
+    cname = e.view(e.persist(cand), f"minhash_cand_{tag}")
+    return name, bname, cname
 
 
 @query("q_dedup_minhash_lsh", tags=("dedup",), headline=True, oracle=_minhash_oracle())
@@ -484,29 +446,18 @@ ORDER BY delta_id, base_id
 """
 
 
-_INCR_CYCLE_IDX: dict = {}
-
-
 def _incr_cycle_base_index(spark: SparkSession, sf_dir: str, base) -> DataFrame:
-    """q_incremental_cycle's persisted base LSH index, held in a
-    fingerprint-keyed memo whose displaced entries are UNPERSISTED on
-    corpus regeneration (ADVICE r10: the previous in-closure persist
-    leaked the displaced frame to GC/ContextCleaner -- the exact class
-    every other memo in the package evicts via evict_where)."""
-    from ..sources.readers import _fingerprint, evict_where
-
-    fp = _fingerprint(f"{sf_dir}/documents.parquet")
-    key = (spark, sf_dir, fp)
-    hit = _INCR_CYCLE_IDX.get(key)
-    if hit is None:
-        evict_where(
-            _INCR_CYCLE_IDX,
-            lambda k: k[:2] == (spark, sf_dir),
-            lambda v: v.unpersist(),
-        )
-        hit = dd.minhash_bucket_index(base, "doc_id", "text").persist()
-        _INCR_CYCLE_IDX[key] = hit
-    return hit
+    """q_incremental_cycle's persisted base LSH index, one store entry
+    per session and documents fingerprint; a displaced index is
+    UNPERSISTED on corpus regeneration (ADVICE r10: the previous
+    in-closure persist leaked the displaced frame)."""
+    return store.get(
+        spark,
+        sf_dir,
+        "incr_index",
+        lambda e: e.persist(dd.minhash_bucket_index(base, "doc_id", "text")),
+        tables=("documents",),
+    )
 
 
 @query(
@@ -539,8 +490,9 @@ def q_incremental_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucketed table (materialized.minhash_index_frame's doctrine);
     # the gate keeps it in-plan because its batch split (base
     # excludes two residues) differs from the standing index's.
-    # Fingerprint-keyed memo WITH eviction (ADVICE r10): a plan-closure
-    # persist had no unpersist path when the corpus regenerated.
+    # A store entry, released on regeneration (ADVICE r10): a
+    # plan-closure persist had no unpersist path when the corpus
+    # regenerated.
     idx0 = _incr_cycle_base_index(spark, sf_dir, base)
     # delta1's (id, band, bucket, sig) rows feed BOTH the p1 probe and
     # the idx1 upsert; computed once per run (|delta| rows) via an
@@ -602,13 +554,46 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding similarity search.
 # ---------------------------------------------------------------------------
 
-# Fingerprint-keyed memo of the cosine headliner's serving state: the
-# collected+quantized query matrix (data, not plan) and the corpus
-# Arrow-batch target (driver-side plan stats). Re-deriving them per
-# call cost one full Spark job + the RDD/stats py4j round trips on
-# every rebuild-regime run (VERDICT r8 #2); a serving engine prepares
-# both once per corpus snapshot.
-_COSINE_PREP: dict[tuple, tuple] = {}
+def _cosine_scored_view(spark: SparkSession, sf_dir: str, entry) -> str:
+    """Prepare q_cosine_topk's query matrix and corpus batch target and
+    register the Arrow scorer's frame as a temp view; returns its name."""
+    import hashlib
+
+    e = read_table(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") < 10)
+    prepared = sim.prepare_cosine_queries(q, "vec_id", "embedding", quantize=4)
+    corpus = e.select("vec_id", "embedding")
+    try:
+        n_part = corpus.rdd.getNumPartitions()
+        size = int(corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        coalesce_to = max(1, min(n_part, size // (8 << 20) + 1))
+        if coalesce_to >= n_part:
+            # keep the scan partitioning untouched (1 = already a
+            # single partition: tells the scorer no merge is needed)
+            coalesce_to = 1 if n_part == 1 else 0
+    except Exception:
+        coalesce_to = None
+    # SQL-text serving posture extended to the headliner's tail
+    # (VERDICT r10 #2: cosine's per-rebuild plan build was ~185 py4j
+    # round trips, the largest fixed driver-side residue in the bench
+    # set). The Arrow scorer's mapInPandas frame -- the part only the
+    # DataFrame API can express -- is constructed ONCE per corpus
+    # fingerprint and registered as a temp view, exactly the khop
+    # hop-frame precedent; every call then parses one small SQL
+    # statement for the rank window + final order. The physical plan is
+    # unchanged (scorer -> window -> filter), pinned by
+    # tests/test_plan_gates.py row-identity and the plan-shape tests.
+    scored = sim.cosine_scored_arrow(
+        e,
+        "vec_id",
+        "embedding",
+        k=5,
+        quantize=4,
+        prepared=prepared,
+        coalesce_to=coalesce_to,
+    )
+    tag = hashlib.md5(repr((sf_dir, entry.fps[0])).encode()).hexdigest()[:8]
+    return entry.view(scored, f"cosine_scored_{tag}")
 
 
 @query(
@@ -656,67 +641,19 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plan_gates.py), so the per-call plan build is a handful
     of py4j calls around the Arrow scorer.
     """
-    import hashlib
-
-    from ..sources.readers import _fingerprint
-
-    e = read_table(spark, sf_dir, "embeddings")
-    fp = _fingerprint(f"{sf_dir}/embeddings.parquet")
-    key = (spark, sf_dir, fp)
-    hit = _COSINE_PREP.get(key)
-    if hit is None:
-        # Displaced fingerprints' prepared matrices are plain driver
-        # data, but the scored-frame VIEW below pins a catalog entry --
-        # evict both so a long-lived multi-corpus service doesn't
-        # accumulate one per regeneration (VERDICT r9 #3).
-        from ..sources.readers import evict_where
-
-        evict_where(
-            _COSINE_PREP,
-            lambda k: k[:2] == key[:2],
-            lambda v: spark.catalog.dropTempView(v),
-        )
-        q = e.filter(F.col("vec_id") < 10)
-        prepared = sim.prepare_cosine_queries(q, "vec_id", "embedding", quantize=4)
-        corpus = e.select("vec_id", "embedding")
-        try:
-            n_part = corpus.rdd.getNumPartitions()
-            size = int(
-                corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            coalesce_to = max(1, min(n_part, size // (8 << 20) + 1))
-            if coalesce_to >= n_part:
-                # keep the scan partitioning untouched (1 = already a
-                # single partition: tells the scorer no merge is needed)
-                coalesce_to = 1 if n_part == 1 else 0
-        except Exception:
-            coalesce_to = None
-        # SQL-text serving posture extended to the headliner's tail
-        # (VERDICT r10 #2: cosine's per-rebuild plan build was ~185
-        # py4j round trips, the largest fixed driver-side residue in
-        # the bench set). The Arrow scorer's mapInPandas frame -- the
-        # part only the DataFrame API can express -- is constructed
-        # ONCE per corpus fingerprint and registered as a temp view,
-        # exactly the khop hop-frame precedent; every call then parses
-        # one small SQL statement for the rank window + final order.
-        # The physical plan is unchanged (scorer -> window -> filter),
-        # pinned by tests/test_plan_gates.py row-identity and the
-        # existing plan-shape tests.
-        scored = sim.cosine_scored_arrow(
-            e,
-            "vec_id",
-            "embedding",
-            k=5,
-            quantize=4,
-            prepared=prepared,
-            coalesce_to=coalesce_to,
-        )
-        tag = hashlib.md5(repr((sf_dir, fp)).encode()).hexdigest()[:8]
-        view = f"cosine_scored_{tag}"
-        scored.createOrReplaceTempView(view)
-        hit = view
-        _COSINE_PREP[key] = hit
-    view = hit
+    # The collected+quantized query matrix (data, not plan) and the
+    # corpus Arrow-batch target (driver-side plan stats) are one store
+    # entry per session and embeddings fingerprint: re-deriving them
+    # per call cost one full Spark job + the RDD/stats py4j round trips
+    # on every rebuild-regime run (VERDICT r8 #2); a serving engine
+    # prepares both once per corpus snapshot.
+    view = store.get(
+        spark,
+        sf_dir,
+        "cosine",
+        functools.partial(_cosine_scored_view, spark, sf_dir),
+        tables=("embeddings",),
+    )
     return spark.sql(f"""
 SELECT q_id, cand_id, rank, score
 FROM (
@@ -895,7 +832,7 @@ ORDER BY stats.source
 @query(
     "q_token_stats_hll",
     tags=("sketch", "text", "report"),
-    priority=TAIL,  # added r11 -- first driver row via _R11_GATED
+    priority=TAIL,  # added r11 -- first driver row in the r11 rotation
     oracle=_token_stats_hll_oracle(),
 )
 def q_token_stats_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1451,7 +1388,7 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_decode_image",
     tags=("multimodal",),
-    priority=TAIL,  # added r11 -- first driver row via _R11_GATED
+    priority=TAIL,  # added r11 -- first driver row in the r11 rotation
     oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id,
@@ -1558,7 +1495,7 @@ def q_decode_image_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_decode_audio",
     tags=("multimodal",),
-    priority=TAIL,  # added r11 -- first driver row via _R11_GATED
+    priority=TAIL,  # added r11 -- first driver row in the r11 rotation
     oracle="""
 WITH ids AS (
   SELECT doc_id AS media_id, 64 + doc_id % 32 AS n FROM documents

@@ -34,17 +34,13 @@ persisted result back is row-identical to computing it inline
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators import dedup as dd
-from ..sources.readers import _fingerprint, read_table
-
-
-def materialize_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_MATERIALIZE", "1") not in ("0", "false")
+from ..sources.readers import read_table
 
 
 def _auto_name(
@@ -54,7 +50,7 @@ def _auto_name(
         repr(
             (
                 sf_dir,
-                tuple(_fingerprint(f"{sf_dir}/{t}.parquet") for t in files),
+                tuple(store.fingerprint(f"{sf_dir}/{t}.parquet") for t in files),
                 params,
             )
         ).encode()
@@ -281,7 +277,7 @@ def simhash_pairs_frame(
         hashes = dd.simhash(d, "doc_id", "text", bits=bits)
         return dd.simhash_pairs(hashes, max_hamming=max_hamming, bits=bits)
 
-    if not force and not materialize_enabled():
+    if not force and not store.regime().materialize:
         return build()
     table = _auto_name("simhash_pairs_auto", sf_dir, bits, max_hamming)
     return ensure_table(spark, table, build, "id_a")
@@ -309,7 +305,7 @@ def dedup_components_frame(
     fixpoint is paid once at dedup time, VERDICT r7 #3), generated
     inline under ``SPARK_GRAFT_MATERIALIZE=0``.
     """
-    if not force and not materialize_enabled():
+    if not force and not store.regime().materialize:
         return build_components(spark, sf_dir)
     table = _auto_name("dedup_comp_auto", sf_dir)
     return ensure_table(
@@ -340,7 +336,7 @@ def minhash_index_frame(
             d, "doc_id", "text", num_perm=num_perm, bands=bands
         )
 
-    if not force and not materialize_enabled():
+    if not force and not store.regime().materialize:
         return build()
     table = _auto_name("minhash_index_auto", sf_dir, base_mod, num_perm, bands)
     return ensure_table(spark, table, build, "bucket")
@@ -367,7 +363,7 @@ def simhash_band_index_frame(
         hashes = dd.simhash(d, "doc_id", "text", bits=bits)
         return dd.simhash_bands(hashes, bands=max_hamming + 1, bits=bits)
 
-    if not force and not materialize_enabled():
+    if not force and not store.regime().materialize:
         return build()
     table = _auto_name(
         "simhash_band_index_auto", sf_dir, base_mod, bits, max_hamming
@@ -406,7 +402,7 @@ def community_labels_frame(
         p = pairs if pairs is not None else simhash_pairs_frame(spark, sf_dir)
         return gr.label_propagation(p, "id_a", "id_b", iters=iters)
 
-    if not force and not materialize_enabled():
+    if not force and not store.regime().materialize:
         return build()
     table = _auto_name("lpa_labels_auto", sf_dir, iters)
     return ensure_table(spark, table, build, "id")
@@ -446,7 +442,7 @@ def hll_registers_frame(
         ).filter(F.col("tok") != "")
         return sk.hll_registers(toks, "tok", "source")
 
-    if not force and not materialize_enabled():
+    if not force and not store.regime().materialize:
         return build()
     table = _auto_name("hll_registers_auto", sf_dir, base_mod)
     return ensure_table(spark, table, build, "bucket")
@@ -484,7 +480,7 @@ def kmv_sketch_frame(
         )
         return sk.kmv_sketch(sh, "key", "source")
 
-    if not force and not materialize_enabled():
+    if not force and not store.regime().materialize:
         return build()
     table = _auto_name("kmv_sketch_auto", sf_dir, base_mod, "shingle")
     return ensure_table(spark, table, build, "source")
@@ -532,7 +528,7 @@ def community_stats_frame(
             .agg(F.count(F.lit(1)).alias("e_in"))
         )
 
-    if not force and not materialize_enabled():
+    if not force and not store.regime().materialize:
         return build()
     table = _auto_name("community_stats_auto", sf_dir, iters)
     return ensure_table(spark, table, build, "label")
@@ -562,7 +558,7 @@ def pair_degrees_frame(
             .agg(F.count(F.lit(1)).alias("d"))
         )
 
-    if not force and not materialize_enabled():
+    if not force and not store.regime().materialize:
         return build()
     table = _auto_name("pair_degrees_auto", sf_dir)
     return ensure_table(spark, table, build, "id")
@@ -588,7 +584,7 @@ def entity_components_frame(
         nodes = s.select(F.col("s_suppkey").alias("id"))
         return connected_components(nodes, pairs.select("id_a", "id_b"))
 
-    if not force and not materialize_enabled():
+    if not force and not store.regime().materialize:
         return build()
     table = _auto_name("entity_comp_auto", sf_dir, files=("supplier",))
     return ensure_table(spark, table, build, "id")

@@ -12,21 +12,18 @@ explicitly. Re-running Lloyd's driver-synced corpus jobs per query
 call was ~42% of the all-registry rebuild-regime sweep
 (scripts/r12_query_sweep.py; OPTIMIZATION_r12.md).
 
-Same serving doctrine as the minhash signature/LSH-index views
-(llmdata._MINHASH_SIG_VIEWS), the khop hop frames, and the cosine
-prepared matrices (llmdata._COSINE_PREP), with the same invalidation
-contract: keyed by (session object, sf_dir, training params) with the
-embeddings-file fingerprint stored in the value, so a regenerated
-corpus RETRAINS instead of serving a stale model. Values are plain
-driver data (k x dim ints, a handful of collected rows) — never
-persisted frames or catalog views — so displacement is plain dict
-overwrite and nothing pins executor or catalog state.
+Each model is one ``store`` entry keyed by (session, sf_dir, "model",
+(model kind, training params)), guarded by the fingerprint of the table
+it was trained on, so a regenerated corpus RETRAINS instead of serving a
+stale model. Values are plain driver data (k x dim ints, a handful of
+collected rows), never persisted frames or catalog views, so nothing
+pins executor or catalog state.
 
-``SPARK_GRAFT_MATERIALIZE=0`` (the materialized-intermediates escape
-hatch) forces in-query training — the one-shot-run posture, and what
-the row-identity tests pin the registry path against. Each query's
-DuckDB oracle retrains from scratch relationally either way, so the
-driver's hash gate verifies the registry path end to end.
+``SPARK_GRAFT_MATERIALIZE=0`` (the materialized-intermediates switch of
+``store.regime()``) forces in-query training: the one-shot-run posture,
+and what the row-identity tests pin the registry path against. Each
+query's DuckDB oracle retrains from scratch relationally either way, so
+the driver's hash gate verifies the registry path end to end.
 """
 
 from __future__ import annotations
@@ -35,11 +32,8 @@ from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
-from ..sources.readers import _fingerprint, read_table
-from .materialized import materialize_enabled
-
-# (session, sf_dir, kind, params) -> (embeddings fingerprint, model)
-_MODELS: dict[tuple, tuple] = {}
+from .. import store
+from ..sources.readers import read_table
 
 
 def _model(
@@ -55,16 +49,14 @@ def _model(
     tokenizer). ``table=None`` is for models trained on a SYNTHETIC
     corpus that is a pure function of the params already in the key —
     there is no on-disk input whose regeneration could stale them."""
-    if not materialize_enabled():
-        return trainer()
-    fp = _fingerprint(f"{sf_dir}/{table}.parquet") if table else None
-    key = (spark, sf_dir, kind, params)
-    hit = _MODELS.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    value = trainer()
-    _MODELS[key] = (fp, value)  # displaced entry is plain data; overwrite
-    return value
+    return store.get(
+        spark,
+        sf_dir,
+        "model",
+        lambda _: trainer(),
+        params=(kind, *params),
+        tables=(table,) if table else (),
+    )
 
 
 def kmeans_centroids(
@@ -226,7 +218,7 @@ def cosine_prepared_queries(
 ) -> tuple:
     """A ``similarity.prepare_cosine_queries`` result for the standard
     ``vec_id < max_id`` query set, prepared once per corpus fingerprint
-    — the ``_COSINE_PREP`` doctrine shared across every
+    — the q_cosine_topk store entry's doctrine, shared across every
     ``cosine_topk_arrow`` consumer (recall audit, mutual-kNN, hard
     negatives, drift) instead of one collect job per call each.
     ``max_rows`` bounds the collected side (VERDICT r12 #6) -- see

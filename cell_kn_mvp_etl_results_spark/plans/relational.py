@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import store
 from ..functions.money import avg_money, cents, money, qty_long
 from ..functions.text import char_ngrams, hyphenate, stable_uuid, tokens
 from ..sources.readers import read_table
@@ -97,45 +98,28 @@ def _broadcast_map_ok(sf_dir: str, table: str, selectivity: float) -> bool:
 # returns a fresh plan every time) -- no plan reuse; the prepared-plan
 # cache sits above this in registry._memoized and stays off in the
 # rebuild/cold regimes. View registration is catalog state keyed on
-# (application, sf_dir, table fingerprint): a regenerated file gets a
+# (session, sf_dir, table fingerprint): a regenerated file gets a
 # new view name, so stale data can never serve (read_table's
 # cache-invalidation contract carries through).
 # ---------------------------------------------------------------------------
 
-_SQL_VIEWS: dict[tuple, str] = {}
-
 
 def _view(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """Temp view over ``read_table(table)``, registered once per session
+    and table fingerprint. Owned by the SparkSession OBJECT, not the
+    application: temp views are session-scoped while applicationId is
+    shared across spark.newSession() siblings (ADVICE r8). A regenerated
+    table gets a NEW view name, and the store drops the displaced one."""
     import hashlib
 
-    from ..sources.readers import _fingerprint
-
-    fp = _fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
-    # Keyed on the SparkSession OBJECT, not applicationId: temp views
-    # are session-scoped while applicationId is shared across
-    # spark.newSession() siblings -- an id-keyed cache would hand a
-    # sibling a view name its catalog never registered (ADVICE r8).
-    # Holding the session in the key is intentional: the cached view
-    # is only valid while that exact session lives.
-    key = (spark, sf_dir, table, fp)
-    name = _SQL_VIEWS.get(key)
-    if name is None:
-        # A regenerated table gets a NEW view name; the displaced
-        # fingerprint's view is catalog state nothing can reach through
-        # this cache anymore -- drop it instead of letting the session
-        # catalog grow one orphan view per regeneration (VERDICT r9 #3).
-        from ..sources.readers import evict_where
-
-        evict_where(
-            _SQL_VIEWS,
-            lambda k: k[:3] == (spark, sf_dir, table),
-            lambda v: spark.catalog.dropTempView(v),
-        )
+    def build(e) -> str:
+        fp = e.fps[0]
         tag = hashlib.md5(repr((sf_dir, fp)).encode()).hexdigest()[:8]
-        name = f"{table}_v{tag}"
-        read_table(spark, sf_dir, table).createOrReplaceTempView(name)
-        _SQL_VIEWS[key] = name
-    return name
+        return e.view(read_table(spark, sf_dir, table), f"{table}_v{tag}")
+
+    return store.get(
+        spark, sf_dir, "view", build, params=(table,), tables=(table,)
+    )
 
 
 # Exact-integer money/quantity idioms, the SQL spelling of
@@ -605,19 +589,6 @@ def _supplier_bucketed_names(
     return (li_t, "l_orderkey"), (omap_t, "o_orderkey")
 
 
-# Positive-probe memo for supplier_bucketed_layout_exists, keyed on
-# (session, warehouse dir, physical table names) -- the names already
-# carry the corpus fingerprint + bucket spec via _auto_name, so a
-# regenerated corpus or changed spec lands on a different key. Only
-# True is memoized (VERDICT r12 #2: the per-call Hadoop-FS probe --
-# catalog.tableExists + FileSystem.exists over py4j -- was re-paid on
-# EVERY builder call, the single largest per-call driver cost the r12
-# round added): a True answer is durable for the session short of an
-# explicit DROP of the paid-for layout, while a False answer must stay
-# re-probeable so a layout built mid-session is picked up.
-_SUPB_LAYOUT_OK: set = set()
-
-
 def supplier_bucketed_layout_exists(
     spark: SparkSession, sf_dir: str, num_buckets: int = 32
 ) -> bool:
@@ -638,19 +609,27 @@ def supplier_bucketed_layout_exists(
         physical_table_name(logical, col, num_buckets)
         for logical, col in _supplier_bucketed_names(spark, sf_dir, num_buckets)
     )
-    memo_key = (spark, spark.conf.get("spark.sql.warehouse.dir"), names)
-    if memo_key in _SUPB_LAYOUT_OK:
+
+    def probe(_) -> "bool | None":
+        jvm = spark._jvm
+        hconf = spark._jsc.hadoopConfiguration()
+        for t in names:
+            if spark.catalog.tableExists(t):
+                continue
+            p = jvm.org.apache.hadoop.fs.Path(f"{_warehouse_dir(spark, t)}/_SUCCESS")
+            if not p.getFileSystem(hconf).exists(p):
+                return None
         return True
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for t in names:
-        if spark.catalog.tableExists(t):
-            continue
-        p = jvm.org.apache.hadoop.fs.Path(f"{_warehouse_dir(spark, t)}/_SUCCESS")
-        if not p.getFileSystem(hconf).exists(p):
-            return False
-    _SUPB_LAYOUT_OK.add(memo_key)
-    return True
+
+    # Only a positive answer is kept (VERDICT r12 #2: the per-call
+    # Hadoop-FS probe was the largest per-call driver cost r12 added):
+    # True is durable for the session short of an explicit DROP of the
+    # paid-for layout, while False must stay re-probeable so a layout
+    # built mid-session is picked up. The names already carry the corpus
+    # fingerprint and bucket spec (_auto_name), so a regenerated corpus
+    # lands on a different key.
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    return bool(store.get(spark, sf_dir, "layout", probe, params=(wh, names)))
 
 
 def materialize_supplier_bucketed(

@@ -9,16 +9,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators import dedup as dd
 from ..sources.readers import read_table
 from .registry import TAIL, query
 
 _DSIR_BUCKETS = 1024
-
-# (session, sf_dir, documents fingerprint) -> checkpointed |sources|-row
-# group-signature frame for q_source_overlap (ADVICE r12; see the
-# builder for the lifecycle contract).
-_GROUP_SIG_FRAMES: dict[tuple, DataFrame] = {}
 
 
 @query(
@@ -167,33 +163,23 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_minhash_overlap,
         group_minhash_signatures,
     )
-    from .materialized import materialize_enabled
 
     d = read_table(spark, sf_dir, "documents")
-    # Fingerprint-keyed registry for the checkpointed |sources|-row
-    # group-signature frame (ADVICE r12): the operator's own per-call
-    # eager checkpoint was never tracked, so every rebuild leaked a
-    # block for the application lifetime and even explain-only plan
-    # builds ran the corpus scan. One checkpoint per corpus
-    # fingerprint, displaced entries evicted (the _UPSERT_DELTA_BANDS
-    # precedent); SPARK_GRAFT_MATERIALIZE=0 falls back to the per-run
-    # checkpoint inside the operator.
-    gsig = None
-    if materialize_enabled():
-        from ..sources.readers import _fingerprint, evict_where
-
-        key = (spark, sf_dir, _fingerprint(f"{sf_dir}/documents.parquet"))
-        gsig = _GROUP_SIG_FRAMES.get(key)
-        if gsig is None:
-            evict_where(
-                _GROUP_SIG_FRAMES,
-                lambda k: k[:2] == key[:2],
-                lambda v: v.unpersist(),
-            )
-            gsig = group_minhash_signatures(
-                d, "source", "text", num_perm=32
-            ).localCheckpoint(eager=True)
-            _GROUP_SIG_FRAMES[key] = gsig
+    # The checkpointed |sources|-row group-signature frame is one store
+    # entry per session and documents fingerprint (ADVICE r12): the
+    # operator's own per-call eager checkpoint was never tracked, so
+    # every rebuild leaked a block for the application lifetime. With
+    # SPARK_GRAFT_MATERIALIZE=0 each call checkpoints afresh and the
+    # store releases the previous call's checkpoint first.
+    gsig = store.get(
+        spark,
+        sf_dir,
+        "group_sig",
+        lambda e: e.checkpoint(
+            group_minhash_signatures(d, "source", "text", num_perm=32)
+        ),
+        tables=("documents",),
+    )
     # |sources|^2-row result: 1-partition sort instead of a
     # range-sampled global sort (the khop r8 precedent -- sampling
     # re-submits the child per run, and this child is corpus-sized).
@@ -276,7 +262,6 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .materialized import (
         community_labels_frame,
         community_stats_frame,
-        materialize_enabled,
         pair_degrees_frame,
         simhash_pairs_frame,
     )
@@ -291,7 +276,7 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SPARK_GRAFT_MATERIALIZE=0 the inline pair regeneration is
     # persisted and passed into the inline LPA + degree builds so all
     # three consumers still share one computation.
-    if materialize_enabled():
+    if store.regime().materialize:
         # Fully-materialized metric path: labels, degrees, and the
         # intra-community rollup are all snapshot tables, so the pair
         # table is never touched -- don't even resolve it (its

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import store
+
 TABLES = (
     "region",
     "nation",
@@ -31,28 +33,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Parquet schema-inference is a driver-side job (~100 ms each, serialized)
-# that re-runs on EVERY spark.read.parquet call. The star-schema files are
-# immutable per (path, mtime, size), so the inferred StructType is cached
-# process-wide and passed explicitly -- the standard trusted-schema read a
-# lake deployment uses (schemas come from the catalog, not file footers).
-_SCHEMA_CACHE: dict = {}
-
-
-def _parquet_schema(spark: SparkSession, path: str):
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
-    if key is not None and key in _SCHEMA_CACHE:
-        return _SCHEMA_CACHE[key]
-    schema = spark.read.parquet(path).schema
-    if key is not None:
-        _SCHEMA_CACHE[key] = schema
-    return schema
-
 
 def _ltz_schema(schema: T.StructType) -> T.StructType:
     """Canonicalize every TIMESTAMP_NTZ field in a read schema to TIMESTAMP
@@ -84,82 +64,19 @@ def _ltz_schema(schema: T.StructType) -> T.StructType:
     )
 
 
-# Opt-in steady-state table caching (SPARK_GRAFT_CACHE_TABLES="all" or
-# a comma list of table names). When enabled, read_table persists each
-# table's DataFrame once per (application, path, file fingerprint);
-# every later read of the same table builds an identical logical plan,
-# which Spark's CacheManager plan-matches to the in-memory columnar
-# copy -- the warm-scan posture of a long-running session serving
-# repeated queries. Tables above _CACHE_SPLIT_BYTES are persisted
-# REPARTITIONED to defaultParallelism: a sub-128MB single parquet file
-# scans as one partition, so caching it as-is would pin every
-# downstream computation over that table to a single thread -- the
-# opposite of the multi-executor layout the cache is modelling. The
-# fingerprint (mtime, size) in the key means an in-place regeneration
-# of the file (the driver rewrites testdata between rounds) unpersists
-# the stale copy instead of silently serving it.
-# OFF by default: at lake scale the fact tables do not fit in memory
-# and the cache would only add churn (bench.py turns it on; see
-# BENCH_NOTES.md for the measurement rationale).
-_PERSISTED: dict[tuple, tuple] = {}  # (appId, path) -> (fingerprint, df)
-_CACHE_SPLIT_BYTES = 128 * 1024  # below this a single partition is fine
-
-
-def _cache_wanted(name: str) -> bool:
-    conf = os.environ.get("SPARK_GRAFT_CACHE_TABLES", "")
-    return conf == "all" or name in {t.strip() for t in conf.split(",") if t.strip()}
-
-
-def _fingerprint(path: str) -> tuple:
-    """Invalidation token for a parquet table path: (mtime_ns, size)
-    for a plain file; for a DIRECTORY-backed table the sorted
-    (name, mtime_ns, size) listing of its entries, because an in-place
-    rewrite of a contained part file does not touch the directory's own
-    mtime (ADVICE r9) -- the listing is the invalidation unit. One
-    level deep: Spark writes create/replace files, which always changes
-    the immediate listing (new part names or new mtimes)."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return (0, 0)
-    if not os.path.isdir(path):
-        return (st.st_mtime_ns, st.st_size)
-    entries = []
-    try:
-        for name in sorted(os.listdir(path)):
-            try:
-                est = os.stat(os.path.join(path, name))
-            except OSError:
-                continue
-            entries.append((name, est.st_mtime_ns, est.st_size))
-    except OSError:
-        pass
-    return tuple(entries) if entries else (st.st_mtime_ns, st.st_size)
-
-
-def evict_where(cache: dict, pred, finalize=None) -> int:
-    """Shared cache-lifecycle helper (VERDICT r9 #3): pop every entry
-    whose KEY satisfies ``pred``, running ``finalize(value)``
-    best-effort first (unpersist a displaced frame, drop its temp
-    view). Every fingerprint-keyed memo in the package calls this
-    before inserting a fresh entry for the same scope, so a corpus
-    regeneration or a new sf_dir REPLACES steady-state serving state
-    instead of accumulating it -- the unbounded-growth leak the r9
-    advice flagged on _UPSERT_DELTA_BANDS applies to any
-    (session/app, sf_dir, fingerprint)-keyed dict whose old entries
-    pin persisted RDDs or catalog views. Dropping the dict reference
-    is itself load-bearing: Spark's ContextCleaner frees a
-    (local)checkpointed RDD's blocks only once the last reference is
-    gone."""
-    stale = [k for k in cache if pred(k)]
-    for k in stale:
-        v = cache.pop(k)
-        if finalize is not None:
-            try:
-                finalize(v)
-            except Exception:
-                pass  # best-effort: a dead session's views are already gone
-    return len(stale)
+# Steady-state table caching (store.regime().tables): read_table persists
+# each table's DataFrame once per (application, table, file fingerprint);
+# every later read builds an identical logical plan, which Spark's
+# CacheManager plan-matches to the in-memory columnar copy -- the
+# warm-scan posture of a long-running session serving repeated queries.
+# Tables above _CACHE_SPLIT_BYTES are persisted REPARTITIONED to
+# defaultParallelism: a small single parquet file scans as one
+# partition, so caching it as-is would pin every downstream computation
+# over that table to a single thread. A regenerated file changes the
+# fingerprint, so the store unpersists the stale copy instead of
+# serving it. Off by default: at lake scale the fact tables do not fit
+# in memory (bench.py turns it on; see BENCH_NOTES.md).
+_CACHE_SPLIT_BYTES = 128 * 1024
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -173,14 +90,25 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # harness), not just session.get_spark.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(_ltz_schema(_parquet_schema(spark, path))).parquet(path)
+    # Parquet schema inference is a driver-side job that re-runs on every
+    # spark.read.parquet call; the inferred schema is kept per file
+    # fingerprint and passed explicitly (the trusted-schema read a lake
+    # deployment does with catalog schemas).
+    schema = store.get(
+        None,
+        sf_dir,
+        "schema",
+        lambda _: spark.read.parquet(path).schema,
+        params=(name,),
+        tables=(name,),
+    )
+    df = spark.read.schema(_ltz_schema(schema)).parquet(path)
     # events.ts as TIMESTAMP(NANOS) parquet surfaces as long nanos via
     # spark.sql.legacy.parquet.nanosAsLong (session.py). The generator
     # emits micro-precision values, so the div-1000 conversion is exact.
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if _cache_wanted(name):
-        # Big tables cache in a parallel layout (see _PERSISTED note).
+    if store.regime().tables:
         # The repartition is part of the RETURNED plan every call, so
         # the CacheManager's canonical-plan match replaces it with the
         # InMemoryRelation on warm reads -- the shuffle runs once.
@@ -190,16 +118,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             big = False
         if big:
             df = df.repartition(spark.sparkContext.defaultParallelism)
-        key = (spark.sparkContext.applicationId, path)
-        fp = _fingerprint(path)
-        cached = _PERSISTED.get(key)
-        if cached is not None and cached[0] != fp:
-            cached[1].unpersist()
-            del _PERSISTED[key]
-            cached = None
-        if cached is None:
-            df.persist()
-            _PERSISTED[key] = (fp, df)
+        store.get(
+            spark.sparkContext,
+            sf_dir,
+            "table",
+            lambda e: e.persist(df),
+            params=(name,),
+            tables=(name,),
+        )
     return df
 
 

@@ -11,6 +11,7 @@ import time
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "all")
 
+from cell_kn_mvp_etl_results_spark import store
 from cell_kn_mvp_etl_results_spark.plans import REGISTRY
 from cell_kn_mvp_etl_results_spark.plans import graph_queries as gq
 from cell_kn_mvp_etl_results_spark.operators.graph import k_hop_counts
@@ -32,7 +33,8 @@ spark.range(1_000_000).selectExpr("sum(id)").collect()
 spec = REGISTRY["q_khop_paths"]
 spec.builder(spark, sf_dir).collect()  # build caches
 
-hops, term, _views = gq._HOP_FRAMES[list(gq._HOP_FRAMES)[0]]
+entry = next(e for k, e in store._ENTRIES.items() if k[2] == "hops")
+hops, term = {"O": entry.frames[0], "P": entry.frames[1]}, entry.frames[2]
 
 
 def counts():

@@ -11,6 +11,7 @@ from cell_kn_mvp_etl_results_spark.operators.graph import modularity
 from cell_kn_mvp_etl_results_spark.operators.selection import (
     dsir_importance,
     group_minhash_overlap,
+    group_minhash_signatures,
     weighted_sample,
 )
 
@@ -76,6 +77,25 @@ def test_group_overlap_identical_and_disjoint_groups(spark):
     }
     assert got[("a", "b")] == 1.0  # identical shingle sets
     assert got[("a", "c")] == 0.0 and got[("b", "c")] == 0.0
+
+
+def test_group_overlap_validates_prepared_signatures(spark):
+    import pytest
+
+    rows = [(1, "alpha beta gamma delta epsilon", "a")]
+    rows += [(2, "alpha beta gamma delta zeta eta", "b")]
+    rows += [(3, "one two three four five six", "c")]
+    df = spark.createDataFrame(rows, "doc_id long, text string, src string")
+
+    def result(gsig=None):
+        out = group_minhash_overlap(df, "src", "text", num_perm=32, gsig=gsig)
+        return sorted(map(tuple, out.collect()))
+
+    matching = group_minhash_signatures(df, "src", "text", num_perm=32)
+    assert result(matching) == result()
+    short = group_minhash_signatures(df, "src", "text", num_perm=16)
+    with pytest.raises(Exception, match="num_perm=32"):
+        result(short)
 
 
 def test_modularity_two_cliques(spark):
