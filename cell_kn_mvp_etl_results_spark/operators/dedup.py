@@ -158,10 +158,11 @@ def jaccard_pairs(
     mode; the gate corpus stays under the cap either way).
 
     Caching: the shingle relation is persisted for reuse across the
-    candidate and verify joins; the reference drops when the returned
-    plan is garbage-collected (Spark's ContextCleaner unpersists
-    unreferenced RDDs), so repeated calls do not accumulate cache
-    beyond live plans.
+    candidate and verify joins. The CacheManager keeps it until it is
+    unpersisted -- the ContextCleaner does not free a persisted plan
+    when the returned frame is dropped -- and a repeated call over the
+    same input re-uses the cached copy (read_table refreshes it when
+    the file is rewritten).
 
     Returns (id_a, id_b, inter, union_sz, jaccard), id_a < id_b.
     """

@@ -657,8 +657,8 @@ def triangle_counts(
     The canonical edge set and the oriented edge list are persisted:
     they are each referenced by multiple joins, and recomputing them
     would re-run the (often expensive) upstream pair generation once
-    per reference. Spark's ContextCleaner unpersists when the returned
-    plan is garbage-collected (same contract as jaccard_pairs).
+    per reference. They stay cached after the call (same contract as
+    jaccard_pairs: the CacheManager, not the ContextCleaner, owns them).
     """
     a, b = F.col(a_col), F.col(b_col)
     e = (
@@ -824,9 +824,9 @@ def pagerank_integer(
 
     The edge+degree relation and node set are persisted: the iteration
     loop references each every round, and recomputing them would re-run
-    the (often expensive) upstream edge derivation iters-fold. The
-    ContextCleaner unpersists when the plan is garbage-collected (same
-    contract as jaccard_pairs).
+    the (often expensive) upstream edge derivation iters-fold. They
+    stay cached after the call (same contract as jaccard_pairs: the
+    CacheManager, not the ContextCleaner, owns them).
     """
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")

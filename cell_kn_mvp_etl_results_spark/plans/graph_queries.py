@@ -74,51 +74,32 @@ def _khop_start(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One shared bucket count for the khop lake layout: the BUILD
-# (materialize_khop_bucketed) and the cross-session RECOVERY
-# (register_surviving_bucketed call in q_khop_paths_bucketed) must
-# declare the same spec, and the table-name fingerprint folds it in so
-# a changed count lands on different tables instead of a surviving
-# directory with a drifted spec (ADVICE r10).
+# The khop lake layout's bucket count. The table names fold it in
+# (materialized.table_name), so a changed count lands on new tables
+# instead of a surviving directory with a drifted spec (ADVICE r10).
 KHOP_NUM_BUCKETS = 32
 
 
 def materialize_khop_bucketed(
-    spark: SparkSession,
-    sf_dir: str,
-    num_buckets: int = KHOP_NUM_BUCKETS,
-    prefix: str = "khop",
-) -> dict[str, str]:
-    """One-time steady-state build: write each hop relation and the
-    per-part terminal summary as BUCKETED + per-bucket-sorted tables on
-    the traversal's join key (``operators/scale.write_bucketed``
-    doctrine, applied to the khop battery). The dedup shuffles and the
-    layout sort are paid HERE, once, at ingest/compaction time -- every
+    spark: SparkSession, sf_dir: str, num_buckets: int = KHOP_NUM_BUCKETS
+) -> dict[str, DataFrame]:
+    """Steady-state build-or-reuse: each hop relation and the per-part
+    terminal summary as a BUCKETED + per-bucket-sorted warehouse table
+    on the traversal's join key (``materialized.ensure_table``, the
+    ``operators/scale.write_bucketed`` doctrine applied to the khop
+    battery). The dedup shuffles and the layout sort are paid once per
+    orders/lineitem fingerprint, at ingest/compaction time -- every
     subsequent traversal reads co-located buckets and shuffles only the
-    frontier (plan-asserted in tests/test_scale_ops.py). The
-    repartition before the write hash-matches Spark's bucket function,
-    so each bucket lands in exactly ONE file and the scan reports both
-    partitioning and ordering.
+    frontier (plan-asserted in tests/test_scale_ops.py). A later
+    session recovers the tables from disk instead of rebuilding.
 
-    Returns {collection-or-"term": table name}. This is the deployment
-    posture SCALE.md's graph section argues for; q_khop_paths' persisted
-    cache is the same layout held in memory for a single application.
+    Returns {"O", "P", "term": the table's rows}. This is the
+    deployment posture SCALE.md's graph section argues for;
+    q_khop_paths' persisted cache is the same layout held in memory for
+    a single application.
     """
-    def drop(table: str) -> None:
-        # Drop BOTH the catalog entry and any orphaned managed location:
-        # with the default in-memory catalog the entry dies with the
-        # session but the warehouse directory survives, and saveAsTable
-        # refuses to reuse it.
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{wh}/{table}")
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jpath):
-            fs.delete(jpath, True)
+    from .materialized import ensure_table
 
-    rels = khop_edge_relations(spark, sf_dir)
-    names: dict[str, str] = {}
     # Only the KEY columns are stored: each table is one collection
     # pair, so the coll/label constants are re-attached as literals at
     # read time (khop_paths_bucketed). Storing them would do more than
@@ -128,59 +109,49 @@ def materialize_khop_bucketed(
     # the bucketed scan and re-shuffles the edge side); literals
     # constant-fold out of the join condition, which is exactly what
     # keeps the bucketed scan exchange-free.
-    from ..operators.scale import write_bucketed
+    def hop(coll: str) -> DataFrame:
+        rels = khop_edge_relations(spark, sf_dir)
+        return rels[coll].select("src_key", "dst_key")
 
-    for coll in ("O", "P"):
-        t = f"{prefix}_hop_{coll.lower()}"
-        drop(t)
-        write_bucketed(
-            rels[coll]
-            .select("src_key", "dst_key")
-            .repartition(num_buckets, "src_key"),
-            t,
-            "src_key",
-            num_buckets=num_buckets,
-            sort_col="src_key",
+    def term() -> DataFrame:
+        rels = khop_edge_relations(spark, sf_dir)
+        return terminal_stats(rels["S"], "S").select(
+            "node_key", "_bkt", "_bm", "_deg"
         )
-        names[coll] = t
-    t = f"{prefix}_term_s"
-    drop(t)
-    write_bucketed(
-        terminal_stats(rels["S"], "S")
-        .select("node_key", "_bkt", "_bm", "_deg")
-        .repartition(num_buckets, "node_key"),
-        t,
-        "node_key",
-        num_buckets=num_buckets,
-        sort_col="node_key",
-    )
-    names["term"] = t
-    return names
+
+    specs = {
+        "O": ("khop_hop_o", "src_key", lambda: hop("O")),
+        "P": ("khop_hop_p", "src_key", lambda: hop("P")),
+        "term": ("khop_term_s", "node_key", term),
+    }
+    files = ("orders", "lineitem")
+    return {
+        k: ensure_table(spark, build, prefix, sf_dir, col, (), files, num_buckets)
+        for k, (prefix, col, build) in specs.items()
+    }
 
 
 def khop_paths_bucketed(
-    spark: SparkSession, sf_dir: str, prefix: str = "khop"
+    spark: SparkSession, sf_dir: str, tables: dict[str, DataFrame]
 ) -> DataFrame:
-    """``q_khop_paths`` reading the PRE-BUCKETED hop tables written by
-    ``materialize_khop_bucketed`` -- row-identical output (test-pinned),
-    but the edge-relation build (3 dedup shuffles + layout sort) is out
-    of the query entirely: per hop, the bucketed scan satisfies the
-    join's required distribution, so only the frontier exchanges."""
+    """``q_khop_paths`` over the PRE-BUCKETED hop tables
+    ``materialize_khop_bucketed`` returns -- row-identical output
+    (test-pinned), but the edge-relation build (3 dedup shuffles +
+    layout sort) is out of the query entirely: per hop, the bucketed
+    scan satisfies the join's required distribution, so only the
+    frontier exchanges."""
 
-    def hop(table: str, src_coll: str, dst_coll: str, label: str):
-        return spark.table(table).select(
+    def hop(coll: str, src_coll: str, label: str):
+        return tables[coll].select(
             F.lit(src_coll).alias("src_coll"),
             "src_key",
-            F.lit(dst_coll).alias("dst_coll"),
+            F.lit(coll).alias("dst_coll"),
             "dst_key",
             F.lit(label).alias("label"),
         )
 
-    hops = {
-        "O": hop(f"{prefix}_hop_o", "C", "O", "PLACED"),
-        "P": hop(f"{prefix}_hop_p", "O", "P", "CONTAINS"),
-    }
-    term = spark.table(f"{prefix}_term_s").select(
+    hops = {"O": hop("O", "C", "PLACED"), "P": hop("P", "O", "CONTAINS")}
+    term = tables["term"].select(
         F.lit("P").alias("node_coll"), "node_key", "_bkt", "_bm", "_deg"
     )
     return (
@@ -333,8 +304,6 @@ def q_attr_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _khop_hop_views(spark: SparkSession, sf_dir: str, e) -> dict[str, str]:
     """Build, materialize and register q_khop_paths' persisted hop and
     terminal relations; returns their temp view names."""
-    import hashlib
-
     # Persisted SORTED on the join key: InMemoryTableScan propagates
     # the cached plan's outputPartitioning AND outputOrdering, so
     # every traversal's sort-merge join skips re-sorting the (large)
@@ -380,7 +349,7 @@ def _khop_hop_views(spark: SparkSession, sf_dir: str, e) -> dict[str, str]:
     # SMJs, semiring aggregation, bitmap_or -- is unchanged (pinned by
     # tests/test_plan_quality.test_khop_counts_never_materializes_
     # last_hop and test_khop_sql_text_plan_shape).
-    tag = hashlib.md5(repr((sf_dir, e.fps)).encode()).hexdigest()[:8]
+    tag = store.tag(sf_dir, e.fps)
     return {
         "hop_o": e.view(hops["O"], f"khop_hop_o_{tag}"),
         "hop_p": e.view(hops["P"], f"khop_hop_p_{tag}"),
@@ -518,47 +487,13 @@ def q_khop_paths_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle -- 0.10x (BENCH_NOTES r6).
 
     First use per (sf_dir, table fingerprints) auto-materializes the
-    tables -- the test/driver convenience path; a deployment runs
+    tables and a later session recovers them from disk -- the
+    test/driver convenience path; a deployment runs
     ``materialize_khop_bucketed`` at ingest/compaction time instead.
     """
-    import hashlib
-
-    fp = hashlib.md5(
-        repr(
-            (
-                sf_dir,
-                store.fingerprint(f"{sf_dir}/orders.parquet"),
-                store.fingerprint(f"{sf_dir}/lineitem.parquet"),
-                KHOP_NUM_BUCKETS,
-            )
-        ).encode()
-    ).hexdigest()[:8]
-    prefix = f"khop_auto_{fp}"
-    if not spark.catalog.tableExists(f"{prefix}_term_s"):
-        # r10: a previous session's tables may survive on disk with
-        # their catalog entries gone -- re-register the bucketed layout
-        # instead of re-paying the build (materialized.
-        # register_surviving_bucketed); rebuild only what's missing.
-        from .materialized import register_surviving_bucketed
-
-        specs = {
-            f"{prefix}_hop_o": "src_key",
-            f"{prefix}_hop_p": "src_key",
-            f"{prefix}_term_s": "node_key",
-        }
-        recovered = {
-            t: register_surviving_bucketed(
-                spark, t, key, num_buckets=KHOP_NUM_BUCKETS
-            )
-            is not None
-            for t, key in specs.items()
-            if not spark.catalog.tableExists(t)
-        }
-        if not all(recovered.values()):
-            materialize_khop_bucketed(
-                spark, sf_dir, num_buckets=KHOP_NUM_BUCKETS, prefix=prefix
-            )
-    return khop_paths_bucketed(spark, sf_dir, prefix=prefix)
+    return khop_paths_bucketed(
+        spark, sf_dir, materialize_khop_bucketed(spark, sf_dir)
+    )
 
 
 @query(

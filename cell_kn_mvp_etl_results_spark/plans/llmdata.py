@@ -214,13 +214,11 @@ def _register_minhash_views(
     buckets, candidate pairs) in store entry ``e``. The signature and
     candidate-pair frames are persisted: without them one statement
     would re-execute the signature pipeline once per view reference."""
-    import hashlib
-
     d = read_table(spark, sf_dir, "documents")
     sigs = e.persist(
         dd.minhash_signatures_wide(d, "doc_id", "text", num_perm=MINHASH_NUM_PERM)
     )
-    tag = hashlib.md5(repr((sf_dir, e.fps[0])).encode()).hexdigest()[:8]
+    tag = store.tag(sf_dir, e.fps)
     name = e.view(sigs, f"minhash_sigs_{tag}")
     structs = dd.band_structs_sql(
         num_perm=MINHASH_NUM_PERM, bands=MINHASH_BANDS
@@ -557,8 +555,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cosine_scored_view(spark: SparkSession, sf_dir: str, entry) -> str:
     """Prepare q_cosine_topk's query matrix and corpus batch target and
     register the Arrow scorer's frame as a temp view; returns its name."""
-    import hashlib
-
     e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
     prepared = sim.prepare_cosine_queries(q, "vec_id", "embedding", quantize=4)
@@ -592,7 +588,7 @@ def _cosine_scored_view(spark: SparkSession, sf_dir: str, entry) -> str:
         prepared=prepared,
         coalesce_to=coalesce_to,
     )
-    tag = hashlib.md5(repr((sf_dir, entry.fps[0])).encode()).hexdigest()[:8]
+    tag = store.tag(sf_dir, entry.fps)
     return entry.view(scored, f"cosine_scored_{tag}")
 
 
@@ -2078,7 +2074,8 @@ def q_countmin_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok")
     ).filter(F.col("tok") != "")
     # persisted: referenced by both the top-20 probe and the weighted
-    # cell build (ContextCleaner unpersists with the plan)
+    # cell build; it stays cached after the call (the CacheManager, not
+    # the ContextCleaner, owns it; read_table refreshes it on a rewrite)
     exact = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("exact_n")).persist()
     top = exact.orderBy(F.col("exact_n").desc(), "tok").limit(20)
     # Hash each DISTINCT token once, weighted by its exact count --

@@ -1,4 +1,5 @@
-"""Auto-build-or-reuse MATERIALIZED intermediates (VERDICT r7 #3/#4).
+"""Warehouse tables: the one module that names, finds, recovers and
+writes the package's fingerprint-named bucketed tables.
 
 The expensive shared intermediates of the dedup layer -- the SimHash
 radius-1 near-dup PAIR GRAPH (at the 30x corpus: 89.6M pairs, ~114 s to
@@ -8,22 +9,30 @@ triangles, clustering coefficient, k-core, PageRank, LPA communities,
 modularity, leakage-safe splitting, exemplar serving).  Recomputing
 them per call is the per-call scale hazard the r7 verdict flags: in
 production they are computed ONCE at dedup/compaction time and every
-consumer reads the persisted result.
+consumer reads the persisted result. The khop and supplier deployment
+twins (plans/graph_queries.py, plans/relational.py) keep their
+co-bucketed hop and fact tables here too.
 
-This module is that posture, applied by DEFAULT through the same
-auto-build-or-reuse contract as ``materialize_khop_bucketed``:
+* ``table_name`` is the only name function: the logical prefix, the
+  store tag (``store.tag``) of (sf_dir, source-table fingerprints,
+  builder parameters), then the bucket spec. A regenerated corpus,
+  changed parameters or a changed bucket spec land on a different
+  table, so a name never serves stale rows or a drifted layout.
+* ``find_table`` is the only existence probe (catalog, or a complete
+  ``_SUCCESS`` directory an earlier session left); ``ensure_table``
+  is the only build-or-reuse path: catalog hit, else recovery of a
+  surviving directory (``register_surviving_bucketed``), else a
+  bucketed+sorted build through ``operators/scale.write_bucketed``.
+* The ``*_frame`` wrappers serve their table while
+  ``store.regime().materialize`` is on and compute inline under
+  ``SPARK_GRAFT_MATERIALIZE=0`` -- the explicit fallback for one-shot
+  runs, and what the row-identity tests pin the materialized path
+  against. The khop and supplier twins always use their tables.
 
-  * the table name carries an md5 of (sf_dir, documents fingerprint,
-    builder parameters), so a regenerated corpus or changed parameters
-    can never serve stale rows -- the same invalidation contract as the
-    registry's prepared-plan cache;
-  * first use per fingerprint builds the bucketed table (paid once per
-    warehouse, amortized across every consumer AND every process:
-    a surviving on-disk table from a previous session is re-read, not
-    rebuilt);
-  * ``SPARK_GRAFT_MATERIALIZE=0`` forces the original in-query
-    computation -- the explicit fallback for one-shot runs, and what
-    the row-identity tests pin the materialized path against.
+Tables live in ``spark.sql.warehouse.dir`` and outlive the process; a
+new session recovers them from disk instead of rebuilding. Nothing
+drops them: a superseded fingerprint's table stays until removed by
+hand.
 
 Correctness is unaffected by construction: the builders are
 deterministic pure functions of the source tables, so reading the
@@ -33,7 +42,7 @@ persisted result back is row-identical to computing it inline
 
 from __future__ import annotations
 
-import hashlib
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,19 +52,21 @@ from ..operators import dedup as dd
 from ..sources.readers import read_table
 
 
-def _auto_name(
-    prefix: str, sf_dir: str, *params, files: tuple = ("documents",)
+def table_name(
+    prefix: str,
+    sf_dir: str,
+    bucket_col: str,
+    params: tuple = (),
+    files: tuple = ("documents",),
+    num_buckets: int = 32,
 ) -> str:
-    fp = hashlib.md5(
-        repr(
-            (
-                sf_dir,
-                tuple(store.fingerprint(f"{sf_dir}/{t}.parquet") for t in files),
-                params,
-            )
-        ).encode()
-    ).hexdigest()[:8]
-    return f"{prefix}_{fp}"
+    """The catalog and warehouse-directory name of a table built from
+    ``files`` under ``sf_dir`` with ``params``. The bucket spec is part
+    of the name (ADVICE r10), so a caller that changes ``bucket_col``
+    or ``num_buckets`` rebuilds instead of recovering an old layout
+    under a wrong declared spec."""
+    fps = store.fingerprints(sf_dir, files)
+    return f"{prefix}_{store.tag(sf_dir, fps, params)}_{bucket_col}{num_buckets}"
 
 
 def _warehouse_dir(spark: SparkSession, table: str) -> str:
@@ -63,11 +74,23 @@ def _warehouse_dir(spark: SparkSession, table: str) -> str:
     return f"{wh}/{table}"
 
 
-def physical_table_name(table: str, bucket_col: str, num_buckets: int) -> str:
-    """The on-disk/catalog name ``ensure_table`` uses: the logical
-    fingerprint name with the bucket spec folded in (ADVICE r10), so a
-    changed spec can never be recovered against an old layout."""
-    return f"{table}_{bucket_col}{num_buckets}"
+def _hadoop(spark: SparkSession, path: str):
+    """(file system, Hadoop Path) for ``path``: the resolver every
+    warehouse probe goes through (ADVICE r11), so a non-local warehouse
+    (hdfs://, s3a://) answers like a local one."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def find_table(spark: SparkSession, table: str) -> "str | None":
+    """Where ``table`` is: "catalog" when this session's catalog has it,
+    "disk" when only a complete (_SUCCESS) warehouse directory survives
+    from an earlier session, else None. A pure probe: it never builds
+    and runs no Spark job."""
+    if spark.catalog.tableExists(table):
+        return "catalog"
+    fs, success = _hadoop(spark, f"{_warehouse_dir(spark, table)}/_SUCCESS")
+    return "disk" if fs.exists(success) else None
 
 
 def _surviving_bucket_ids(fs, jvm, path: str, num_buckets: int) -> "set | None":
@@ -141,10 +164,8 @@ def register_surviving_bucketed(
     from ..operators.scale import read_bucket_spec
 
     path = _warehouse_dir(spark, table)
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")):
+    fs, success = _hadoop(spark, f"{path}/_SUCCESS")
+    if not fs.exists(success):
         return None
     spec = read_bucket_spec(spark, table)
     if spec is not None and (
@@ -152,7 +173,7 @@ def register_surviving_bucketed(
         or spec.get("num_buckets") != num_buckets
     ):
         return None
-    ids = _surviving_bucket_ids(fs, jvm, path, num_buckets)
+    ids = _surviving_bucket_ids(fs, spark._jvm, path, num_buckets)
     if ids is None:  # a data file contradicts the layout: always refuse
         return None
     if spec is None and ids != set(range(num_buckets)):
@@ -183,20 +204,26 @@ def register_surviving_bucketed(
 
 def ensure_table(
     spark: SparkSession,
-    table: str,
-    build: "callable",
+    build: Callable[[], DataFrame],
+    prefix: str,
+    sf_dir: str,
     bucket_col: str,
+    params: tuple = (),
+    files: tuple = ("documents",),
     num_buckets: int = 32,
 ) -> DataFrame:
-    """Return ``table``'s rows, building it if this warehouse has never
-    materialized it.  Three tiers:
+    """The rows of the table ``table_name(prefix, sf_dir, bucket_col,
+    params, files, num_buckets)`` names, building it if this warehouse
+    has never materialized it. Three tiers:
 
     1. catalog hit -> ``spark.table`` (bucketed scan, no Exchange on
        the bucket key);
-    2. on-disk hit from a PREVIOUS session (in-memory catalog died with
-       it) -> read the surviving parquet directly; rows identical, only
-       the bucketing metadata is lost to this session's planner;
-    3. miss -> build bucketed+sorted via ``write_bucketed``.
+    2. a complete directory from a PREVIOUS session (the in-memory
+       catalog died with it) -> re-registered with its verified bucket
+       spec (``register_surviving_bucketed``), or read as plain parquet
+       when the evidence does not confirm the spec; rows identical;
+    3. miss -> build bucketed+sorted via ``write_bucketed``; a partial
+       directory without _SUCCESS (a crashed write) is deleted first.
 
     Concurrency contract (ADVICE r8): the warehouse assumes a SINGLE
     WRITER per table name -- the standard posture for a local
@@ -206,52 +233,58 @@ def ensure_table(
     race on the SAME table; tier 3 therefore tolerates losing that
     race: if the write fails because the other writer created the
     table/directory first, the winner's (deterministically identical)
-    rows are re-read instead of raising. What is NOT defended: a
+    rows are read instead of raising. What is NOT defended: a
     second process deleting the first's still-_SUCCESS-less in-flight
     directory as orphaned -- distinguishing a crash from an in-flight
     writer needs a lock service the engine does not assume.
-
-    The PHYSICAL name folds in the bucket spec (``{table}_{col}{n}``,
-    ADVICE r10): a caller that changes ``bucket_col``/``num_buckets``
-    between versions lands on a DIFFERENT directory and rebuilds,
-    instead of recovering an old layout under a wrong declared spec.
     """
     from ..operators.scale import write_bucketed
 
-    table = physical_table_name(table, bucket_col, num_buckets)
-
-    if spark.catalog.tableExists(table):
+    table = table_name(prefix, sf_dir, bucket_col, params, files, num_buckets)
+    where = find_table(spark, table)
+    if where is None:
+        fs, jpath = _hadoop(spark, _warehouse_dir(spark, table))
+        if fs.exists(jpath):
+            fs.delete(jpath, True)
+        try:
+            # The repartition hash-matches Spark's bucket function, so
+            # each bucket lands in exactly one file.
+            write_bucketed(
+                build().repartition(num_buckets, bucket_col),
+                table,
+                bucket_col,
+                num_buckets=num_buckets,
+                sort_col=bucket_col,
+            )
+            where = "catalog"
+        except Exception:
+            # Lost a concurrent-creation race: serve the winner's table.
+            # Anything else genuinely failed -- re-raise.
+            where = find_table(spark, table)
+            if where is None:
+                raise
+    if where == "catalog":
         return spark.table(table)
     recovered = register_surviving_bucketed(spark, table, bucket_col, num_buckets)
     if recovered is not None:
         return recovered
-    path = _warehouse_dir(spark, table)
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    success = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    if fs.exists(success):
-        return spark.read.parquet(path)
-    if fs.exists(jpath):  # partial/orphaned write: rebuild from scratch
-        fs.delete(jpath, True)
-    try:
-        write_bucketed(
-            build().repartition(num_buckets, bucket_col),
-            table,
-            bucket_col,
-            num_buckets=num_buckets,
-            sort_col=bucket_col,
-        )
-    except Exception:
-        # Lost a concurrent-creation race: serve the winner's table
-        # (same fingerprint -> deterministically identical rows).
-        # Anything else genuinely failed -- re-raise.
-        if spark.catalog.tableExists(table):
-            return spark.table(table)
-        if fs.exists(success):
-            return spark.read.parquet(path)
-        raise
-    return spark.table(table)
+    return spark.read.parquet(_warehouse_dir(spark, table))
+
+
+def _frame(
+    spark: SparkSession,
+    build: Callable[[], DataFrame],
+    prefix: str,
+    sf_dir: str,
+    bucket_col: str,
+    params: tuple = (),
+    files: tuple = ("documents",),
+) -> DataFrame:
+    """``build()`` inline under ``SPARK_GRAFT_MATERIALIZE=0``, else the
+    rows of its warehouse table (``ensure_table``)."""
+    if not store.regime().materialize:
+        return build()
+    return ensure_table(spark, build, prefix, sf_dir, bucket_col, params, files)
 
 
 def simhash_pairs_frame(
@@ -259,7 +292,6 @@ def simhash_pairs_frame(
     sf_dir: str,
     bits: int = 32,
     max_hamming: int = 1,
-    force: bool = False,
 ) -> DataFrame:
     """The SimHash radius-``max_hamming`` near-dup pair graph
     (id_a, id_b, hamming), id_a < id_b -- served from the materialized
@@ -277,23 +309,9 @@ def simhash_pairs_frame(
         hashes = dd.simhash(d, "doc_id", "text", bits=bits)
         return dd.simhash_pairs(hashes, max_hamming=max_hamming, bits=bits)
 
-    if not force and not store.regime().materialize:
-        return build()
-    table = _auto_name("simhash_pairs_auto", sf_dir, bits, max_hamming)
-    return ensure_table(spark, table, build, "id_a")
-
-
-def build_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The inline (doc_id, component) computation: 3-gram Jaccard >=
-    0.05 pairs -> iterative min-label CC -- the q_dedup_clusters
-    machinery, shared by the inline path, the auto-materializer, and
-    ``materialize_dedup_components`` so the three can never drift."""
-    d = read_table(spark, sf_dir, "documents")
-    pairs = dd.jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.05)
-    return dd.connected_components(
-        d.select(F.col("doc_id").alias("id")),
-        pairs.select("id_a", "id_b"),
-    ).select(F.col("id").alias("doc_id"), "component")
+    return _frame(
+        spark, build, "simhash_pairs_auto", sf_dir, "id_a", (bits, max_hamming)
+    )
 
 
 def dedup_components_frame(
@@ -303,14 +321,22 @@ def dedup_components_frame(
     3-gram Jaccard >= 0.05 pair graph -- the q_dedup_clusters machinery,
     served from the materialized bucketed table by default (the CC
     fixpoint is paid once at dedup time, VERDICT r7 #3), generated
-    inline under ``SPARK_GRAFT_MATERIALIZE=0``.
+    inline under ``SPARK_GRAFT_MATERIALIZE=0``. ``force`` serves the
+    table whatever the switch says (q_split_leakage_bucketed, the
+    always-materialized posture).
     """
-    if not force and not store.regime().materialize:
-        return build_components(spark, sf_dir)
-    table = _auto_name("dedup_comp_auto", sf_dir)
-    return ensure_table(
-        spark, table, lambda: build_components(spark, sf_dir), "doc_id"
-    )
+
+    def build() -> DataFrame:
+        d = read_table(spark, sf_dir, "documents")
+        pairs = dd.jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.05)
+        return dd.connected_components(
+            d.select(F.col("doc_id").alias("id")),
+            pairs.select("id_a", "id_b"),
+        ).select(F.col("id").alias("doc_id"), "component")
+
+    if force:
+        return ensure_table(spark, build, "dedup_comp_auto", sf_dir, "doc_id")
+    return _frame(spark, build, "dedup_comp_auto", sf_dir, "doc_id")
 
 
 def minhash_index_frame(
@@ -319,7 +345,6 @@ def minhash_index_frame(
     base_mod: int = 10,
     num_perm: int = 32,
     bands: int = 8,
-    force: bool = False,
 ) -> DataFrame:
     """The persisted LSH index (id, band, bucket, sig) of the BASE
     corpus slice (doc_id % base_mod != 0) -- what incremental dedup
@@ -336,10 +361,8 @@ def minhash_index_frame(
             d, "doc_id", "text", num_perm=num_perm, bands=bands
         )
 
-    if not force and not store.regime().materialize:
-        return build()
-    table = _auto_name("minhash_index_auto", sf_dir, base_mod, num_perm, bands)
-    return ensure_table(spark, table, build, "bucket")
+    params = (base_mod, num_perm, bands)
+    return _frame(spark, build, "minhash_index_auto", sf_dir, "bucket", params)
 
 
 def simhash_band_index_frame(
@@ -348,7 +371,6 @@ def simhash_band_index_frame(
     base_mod: int = 10,
     bits: int = 32,
     max_hamming: int = 1,
-    force: bool = False,
 ) -> DataFrame:
     """The persisted SimHash BAND index (id, simhash, band, val) of the
     BASE corpus slice (doc_id % base_mod != 0) -- what incremental pair
@@ -363,19 +385,14 @@ def simhash_band_index_frame(
         hashes = dd.simhash(d, "doc_id", "text", bits=bits)
         return dd.simhash_bands(hashes, bands=max_hamming + 1, bits=bits)
 
-    if not force and not store.regime().materialize:
-        return build()
-    table = _auto_name(
-        "simhash_band_index_auto", sf_dir, base_mod, bits, max_hamming
-    )
-    return ensure_table(spark, table, build, "val")
+    params = (base_mod, bits, max_hamming)
+    return _frame(spark, build, "simhash_band_index_auto", sf_dir, "val", params)
 
 
 def community_labels_frame(
     spark: SparkSession,
     sf_dir: str,
     iters: int = 2,
-    force: bool = False,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic-LPA community labels (id, label) over the SimHash
@@ -402,17 +419,13 @@ def community_labels_frame(
         p = pairs if pairs is not None else simhash_pairs_frame(spark, sf_dir)
         return gr.label_propagation(p, "id_a", "id_b", iters=iters)
 
-    if not force and not store.regime().materialize:
-        return build()
-    table = _auto_name("lpa_labels_auto", sf_dir, iters)
-    return ensure_table(spark, table, build, "id")
+    return _frame(spark, build, "lpa_labels_auto", sf_dir, "id", (iters,))
 
 
 def hll_registers_frame(
     spark: SparkSession,
     sf_dir: str,
     base_mod: "int | None" = 10,
-    force: bool = False,
 ) -> DataFrame:
     """The persisted HLL register table (source, bucket, r) of the BASE
     corpus slice (doc_id % base_mod != 0) -- the cardinality profile's
@@ -442,17 +455,13 @@ def hll_registers_frame(
         ).filter(F.col("tok") != "")
         return sk.hll_registers(toks, "tok", "source")
 
-    if not force and not store.regime().materialize:
-        return build()
-    table = _auto_name("hll_registers_auto", sf_dir, base_mod)
-    return ensure_table(spark, table, build, "bucket")
+    return _frame(spark, build, "hll_registers_auto", sf_dir, "bucket", (base_mod,))
 
 
 def kmv_sketch_frame(
     spark: SparkSession,
     sf_dir: str,
     base_mod: "int | None" = 10,
-    force: bool = False,
 ) -> DataFrame:
     """The persisted bottom-k (KMV) sketch table (source, rn, h, key)
     of the BASE corpus slice (doc_id % base_mod != 0) -- the
@@ -480,17 +489,15 @@ def kmv_sketch_frame(
         )
         return sk.kmv_sketch(sh, "key", "source")
 
-    if not force and not store.regime().materialize:
-        return build()
-    table = _auto_name("kmv_sketch_auto", sf_dir, base_mod, "shingle")
-    return ensure_table(spark, table, build, "source")
+    return _frame(
+        spark, build, "kmv_sketch_auto", sf_dir, "source", (base_mod, "shingle")
+    )
 
 
 def community_stats_frame(
     spark: SparkSession,
     sf_dir: str,
     iters: int = 2,
-    force: bool = False,
     pairs: DataFrame | None = None,
     labels: DataFrame | None = None,
 ) -> DataFrame:
@@ -528,16 +535,12 @@ def community_stats_frame(
             .agg(F.count(F.lit(1)).alias("e_in"))
         )
 
-    if not force and not store.regime().materialize:
-        return build()
-    table = _auto_name("community_stats_auto", sf_dir, iters)
-    return ensure_table(spark, table, build, "label")
+    return _frame(spark, build, "community_stats_auto", sf_dir, "label", (iters,))
 
 
 def pair_degrees_frame(
     spark: SparkSession,
     sf_dir: str,
-    force: bool = False,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Vertex degrees (id, d) of the SimHash radius-1 near-dup pair
@@ -558,15 +561,10 @@ def pair_degrees_frame(
             .agg(F.count(F.lit(1)).alias("d"))
         )
 
-    if not force and not store.regime().materialize:
-        return build()
-    table = _auto_name("pair_degrees_auto", sf_dir)
-    return ensure_table(spark, table, build, "id")
+    return _frame(spark, build, "pair_degrees_auto", sf_dir, "id")
 
 
-def entity_components_frame(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> DataFrame:
+def entity_components_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resolved supplier entities (id, component) over the FastSS
     deletion-neighborhood pair graph (edit distance <= 1) -- the
     q_entity_resolution machinery. Entity resolution is run once per
@@ -584,7 +582,6 @@ def entity_components_frame(
         nodes = s.select(F.col("s_suppkey").alias("id"))
         return connected_components(nodes, pairs.select("id_a", "id_b"))
 
-    if not force and not store.regime().materialize:
-        return build()
-    table = _auto_name("entity_comp_auto", sf_dir, files=("supplier",))
-    return ensure_table(spark, table, build, "id")
+    return _frame(
+        spark, build, "entity_comp_auto", sf_dir, "id", files=("supplier",)
+    )

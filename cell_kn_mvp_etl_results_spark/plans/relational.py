@@ -110,11 +110,9 @@ def _view(spark: SparkSession, sf_dir: str, table: str) -> str:
     application: temp views are session-scoped while applicationId is
     shared across spark.newSession() siblings (ADVICE r8). A regenerated
     table gets a NEW view name, and the store drops the displaced one."""
-    import hashlib
 
     def build(e) -> str:
-        fp = e.fps[0]
-        tag = hashlib.md5(repr((sf_dir, fp)).encode()).hexdigest()[:8]
+        tag = store.tag(sf_dir, e.fps)
         return e.view(read_table(spark, sf_dir, table), f"{table}_v{tag}")
 
     return store.get(
@@ -572,21 +570,10 @@ ORDER BY revenue DESC, nation
 
 
 _SUPB_FILES = ("orders", "lineitem", "customer", "nation", "region")
-
-
-def _supplier_bucketed_names(
-    spark: SparkSession, sf_dir: str, num_buckets: int = 32
-) -> tuple[tuple[str, str], tuple[str, str]]:
-    """((logical, bucket_col)...) for the supplier twin's two tables --
-    one derivation shared by the builder and the routing probe so the
-    two can never disagree about which layout they are talking about."""
-    from .materialized import _auto_name
-
-    li_t = _auto_name("supb_li_auto", sf_dir, num_buckets, files=_SUPB_FILES)
-    omap_t = _auto_name(
-        "supb_omap_auto", sf_dir, num_buckets, files=_SUPB_FILES
-    )
-    return (li_t, "l_orderkey"), (omap_t, "o_orderkey")
+# (logical prefix, bucket column) of the supplier twin's two
+# co-bucketed tables, shared by the builder and the routing probe so the
+# two can never disagree about which layout they are talking about.
+_SUPB_TABLES = (("supb_li_auto", "l_orderkey"), ("supb_omap_auto", "o_orderkey"))
 
 
 def supplier_bucketed_layout_exists(
@@ -594,39 +581,26 @@ def supplier_bucketed_layout_exists(
 ) -> bool:
     """True iff BOTH of the twin's co-bucketed tables already exist for
     this corpus fingerprint -- in this session's catalog or as a
-    complete (_SUCCESS) surviving warehouse directory. A pure probe:
-    never builds, so the headliner can route to the paid-for layout
-    without ever paying the build inside a query (VERDICT r10 #5).
-
-    The directory probe goes through the Hadoop FS API (ADVICE r11),
-    the same resolver ``register_surviving_bucketed``/``ensure_table``
-    use -- an ``os.path`` probe silently answers False for any
-    non-local warehouse (hdfs://, s3a://) and the route would never
-    fire exactly where the layout matters most."""
-    from .materialized import _warehouse_dir, physical_table_name
+    complete (_SUCCESS) surviving warehouse directory
+    (``materialized.find_table``). A pure probe: never builds, so the
+    headliner can route to the paid-for layout without ever paying the
+    build inside a query (VERDICT r10 #5)."""
+    from .materialized import find_table, table_name
 
     names = tuple(
-        physical_table_name(logical, col, num_buckets)
-        for logical, col in _supplier_bucketed_names(spark, sf_dir, num_buckets)
+        table_name(prefix, sf_dir, col, (num_buckets,), _SUPB_FILES, num_buckets)
+        for prefix, col in _SUPB_TABLES
     )
 
     def probe(_) -> "bool | None":
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        for t in names:
-            if spark.catalog.tableExists(t):
-                continue
-            p = jvm.org.apache.hadoop.fs.Path(f"{_warehouse_dir(spark, t)}/_SUCCESS")
-            if not p.getFileSystem(hconf).exists(p):
-                return None
-        return True
+        return all(find_table(spark, t) for t in names) or None
 
     # Only a positive answer is kept (VERDICT r12 #2: the per-call
     # Hadoop-FS probe was the largest per-call driver cost r12 added):
     # True is durable for the session short of an explicit DROP of the
     # paid-for layout, while False must stay re-probeable so a layout
     # built mid-session is picked up. The names already carry the corpus
-    # fingerprint and bucket spec (_auto_name), so a regenerated corpus
+    # fingerprint and bucket spec (table_name), so a regenerated corpus
     # lands on a different key.
     wh = spark.conf.get("spark.sql.warehouse.dir")
     return bool(store.get(spark, sf_dir, "layout", probe, params=(wh, names)))
@@ -637,7 +611,7 @@ def materialize_supplier_bucketed(
     sf_dir: str,
     num_buckets: int = 32,
 ) -> tuple[str, str]:
-    """One-time steady-state build for the supplier-volume family
+    """Steady-state build-or-reuse for the supplier-volume family
     (VERDICT r9 #3 on the query's 100x floor): write the fact side
     (l_orderkey, l_suppkey, l_extendedprice, l_discount) and the
     filtered ORDER MAP (o_orderkey, cust_nation -- orders joined
@@ -679,23 +653,33 @@ def materialize_supplier_bucketed(
             )
         )
 
-    (li_t, li_col), (omap_t, omap_col) = _supplier_bucketed_names(
-        spark, sf_dir, num_buckets
+    # Queried through temp views over the RETURNED frames, not the
+    # catalog names: in a fresh session a table may exist only on disk
+    # and be read as plain parquet (ensure_table tier 2), so SQL against
+    # the saved name would fail. The views live in one store entry per
+    # session and corpus fingerprint, dropped when the corpus changes.
+    def register(e) -> tuple[str, str]:
+        params = (num_buckets,)
+        tag = store.tag(sf_dir, e.fps, params)
+        builds = (build_li, build_omap)
+        return tuple(
+            e.view(
+                ensure_table(
+                    spark, build, prefix, sf_dir, col, params, _SUPB_FILES, num_buckets
+                ),
+                f"{prefix}_{tag}_v",
+            )
+            for (prefix, col), build in zip(_SUPB_TABLES, builds)
+        )
+
+    return store.get(
+        spark,
+        sf_dir,
+        "view",
+        register,
+        params=("supb", num_buckets),
+        tables=_SUPB_FILES,
     )
-    li_df = ensure_table(spark, li_t, build_li, li_col, num_buckets)
-    omap_df = ensure_table(spark, omap_t, build_omap, omap_col, num_buckets)
-    # Query through temp views over the RETURNED frames, not the raw
-    # catalog names: in a fresh session the tables exist only on disk
-    # (ensure_table tier 2 reads the surviving parquet; the in-memory
-    # catalog died with the builder's session), so SQL against the
-    # saved name would fail. Tier-1 hits keep the bucketed scan -- the
-    # view wraps the catalog relation; tier-2 falls back to a plain
-    # parquet scan with identical rows (ensure_table's documented
-    # metadata-loss caveat).
-    li_v, omap_v = f"{li_t}_v", f"{omap_t}_v"
-    li_df.createOrReplaceTempView(li_v)
-    omap_df.createOrReplaceTempView(omap_v)
-    return li_v, omap_v
 
 
 @query(
@@ -711,17 +695,17 @@ def q_supplier_volume_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query's profiled 100x floor -- runs with NO Exchange on either
     side; only the |suppkey x nations| partial-aggregate rows shuffle
     (the agg-below-join shape of the shipped above-gate branch,
-    unchanged). MEASURED at 100x (scripts/supplier_bucketed_100x.py,
-    BENCH_NOTES r10): the docstring claim the r9 verdict flagged read
-    "bucketing removes the exchange+sort entirely" -- the measured
+    unchanged). MEASURED at 100x (BENCH_NOTES r10): the docstring
+    claim the r9 verdict flagged read "bucketing removes the
+    exchange+sort entirely" -- the measured
     truth is exchange YES, sort NO: Spark 4 no longer propagates disk
     sortBy ordering, so the SMJ keeps cheap per-bucket Sorts of
     already-sorted runs. Row-identical to q_local_supplier_volume
     (same oracle; the integer-cents partial sums are associative).
     First use per (sf_dir, fingerprints) auto-materializes the tables
     -- a deployment runs ``materialize_supplier_bucketed`` at ingest
-    time instead; a later SESSION recovers the layout from disk via
-    ``materialized.register_surviving_bucketed``."""
+    time instead; a later SESSION recovers the layout from disk
+    (``materialized.ensure_table``)."""
     return _supplier_bucketed_frame(spark, sf_dir)
 
 

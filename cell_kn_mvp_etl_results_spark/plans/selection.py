@@ -284,8 +284,16 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = None
     else:
         # Inline mode: ONE persisted pair regeneration feeds the LPA
-        # build, the degree build, the stats build, and the metric.
-        pairs = simhash_pairs_frame(spark, sf_dir).persist()
+        # build, the degree build, the stats build, and the metric. The
+        # store holds it for this call only and releases it before the
+        # next call rebuilds.
+        pairs = store.get(
+            spark,
+            sf_dir,
+            "pairs",
+            lambda e: e.persist(simhash_pairs_frame(spark, sf_dir)),
+            tables=("documents",),
+        )
     labels = community_labels_frame(spark, sf_dir, iters=2, pairs=pairs)
     degrees = pair_degrees_frame(spark, sf_dir, pairs=pairs)
     intra = community_stats_frame(

@@ -94,13 +94,17 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # spark.read.parquet call; the inferred schema is kept per file
     # fingerprint and passed explicitly (the trusted-schema read a lake
     # deployment does with catalog schemas).
+    def schema_of(_):
+        # First read of this file generation. Frames persisted over an
+        # earlier generation -- by any operator, in any regime -- stay in
+        # the CacheManager, which matches a new read of the same path to
+        # them; refreshing the path makes them re-read the file instead
+        # of serving its old rows.
+        spark.catalog.refreshByPath(path)
+        return spark.read.parquet(path).schema
+
     schema = store.get(
-        None,
-        sf_dir,
-        "schema",
-        lambda _: spark.read.parquet(path).schema,
-        params=(name,),
-        tables=(name,),
+        None, sf_dir, "schema", schema_of, params=(name,), tables=(name,)
     )
     df = spark.read.schema(_ltz_schema(schema)).parquet(path)
     # events.ts as TIMESTAMP(NANOS) parquet surfaces as long nanos via

@@ -27,17 +27,24 @@ its frames, drop its views) before building the next one.
 * ``SPARK_GRAFT_MATERIALIZE`` (default on) keeps materialized
   intermediates: khop hop frames, minhash signatures, the cosine view,
   group signatures, delta bands, the incremental index, trained models,
-  and the warehouse tables of ``plans.materialized``.
+  q_modularity's inline pair frame, and the warehouse tables of
+  ``plans.materialized``.
 
 With a switch off, state of its kinds that pins executor memory or
 catalog views is kept for at most one generation: the next ``get`` of
 the same key releases it and builds afresh, so every call recomputes
 and nothing accumulates. State that pins nothing is then not kept at
 all. Metadata kinds (``SWITCH`` value None) are kept in every regime.
+
+``tag`` is the one source of names derived from fingerprints: the temp
+views entries register and the on-disk warehouse tables that
+``plans.materialized`` names, finds and builds. Those tables are not
+entries: they outlive the process and nothing here releases them.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 from collections.abc import Callable
@@ -61,6 +68,7 @@ SWITCH = {
     "upsert_bands": "materialize",
     "incr_index": "materialize",
     "model": "materialize",
+    "pairs": "materialize",
 }
 
 
@@ -105,6 +113,20 @@ def fingerprint(path: str) -> tuple:
     except OSError:
         pass
     return tuple(entries) if entries else (st.st_mtime_ns, st.st_size)
+
+
+def fingerprints(sf_dir: str, tables: tuple) -> tuple:
+    """The fingerprints of the named parquet tables under ``sf_dir``."""
+    return tuple(fingerprint(os.path.join(sf_dir, f"{t}.parquet")) for t in tables)
+
+
+def tag(sf_dir: str, fps: tuple, params: tuple = ()) -> str:
+    """Eight hex digits naming state derived from ``fps`` under
+    ``sf_dir`` with ``params``: the one source of fingerprint-derived
+    names (temp views, warehouse tables). A regenerated table or a
+    changed parameter gives a different name, so a name never serves
+    another generation's rows."""
+    return hashlib.md5(repr((sf_dir, fps, params)).encode()).hexdigest()[:8]
 
 
 @dataclass(eq=False)
@@ -177,7 +199,7 @@ def get(
     build returning None is not kept, so a negative probe stays
     re-probeable."""
     key = (owner, sf_dir, kind, params)
-    fps = tuple(fingerprint(os.path.join(sf_dir, f"{t}.parquet")) for t in tables)
+    fps = fingerprints(sf_dir, tables)
     switch = SWITCH[kind]
     on = switch is None or getattr(regime(), switch)
     old = _ENTRIES.get(key)

@@ -51,15 +51,12 @@ def test_materialized_table_survives_and_serves_reuse(spark, sf_dir):
     # observe job counts cheaply here, but we can assert the table
     # exists after first use and that a re-read returns the same rows.
     from cell_kn_mvp_etl_results_spark.plans.materialized import (
-        _auto_name,
-        physical_table_name,
         simhash_pairs_frame,
+        table_name,
     )
 
     a = sorted(map(tuple, simhash_pairs_frame(spark, sf_dir).collect()))
-    table = physical_table_name(
-        _auto_name("simhash_pairs_auto", sf_dir, 32, 1), "id_a", 32
-    )
+    table = table_name("simhash_pairs_auto", sf_dir, "id_a", (32, 1))
     # Tier 1 (built this session -> catalog) or tier 2 (surviving
     # on-disk table from a previous session, read directly): either
     # way the materialization must exist on disk after first use.
@@ -74,10 +71,10 @@ def test_materialized_table_survives_and_serves_reuse(spark, sf_dir):
 def test_stale_fingerprint_gets_its_own_table(spark, sf_dir, tmp_path):
     # A different corpus (fingerprint) must never serve another's rows:
     # the name itself carries the fingerprint.
-    from cell_kn_mvp_etl_results_spark.plans.materialized import _auto_name
+    from cell_kn_mvp_etl_results_spark.plans.materialized import table_name
 
-    n1 = _auto_name("x", sf_dir)
-    n2 = _auto_name("x", sf_dir, "other-params")
+    n1 = table_name("x", sf_dir, "id")
+    n2 = table_name("x", sf_dir, "id", ("other-params",))
     assert n1 != n2
 
 
@@ -89,13 +86,13 @@ def test_ensure_table_recovers_from_partial_write(spark, sf_dir):
     from cell_kn_mvp_etl_results_spark.plans.materialized import (
         _warehouse_dir,
         ensure_table,
-        physical_table_name,
+        table_name,
     )
 
-    table = f"mat_test_{uuid.uuid4().hex[:8]}"
-    # plant the orphan at the PHYSICAL (spec-folded) path ensure_table
-    # builds into
-    path = _warehouse_dir(spark, physical_table_name(table, "id", 32))
+    prefix = f"mat_test_{uuid.uuid4().hex[:8]}"
+    # plant the orphan at the (spec-folded) path ensure_table builds into
+    table = table_name(prefix, sf_dir, "id")
+    path = _warehouse_dir(spark, table)
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/part-orphan.parquet")
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -106,14 +103,16 @@ def test_ensure_table_recovers_from_partial_write(spark, sf_dir):
     def build():
         return spark.range(5).selectExpr("id", "id * 2 AS v")
 
-    got = sorted(map(tuple, ensure_table(spark, table, build, "id").collect()))
+    got = sorted(
+        map(tuple, ensure_table(spark, build, prefix, sf_dir, "id").collect())
+    )
     assert got == [(i, 2 * i) for i in range(5)]
     # second call serves tier 1 (catalog) -- same rows, no rebuild error
-    again = sorted(map(tuple, ensure_table(spark, table, build, "id").collect()))
-    assert again == got
-    spark.sql(
-        f"DROP TABLE IF EXISTS {physical_table_name(table, 'id', 32)}"
+    again = sorted(
+        map(tuple, ensure_table(spark, build, prefix, sf_dir, "id").collect())
     )
+    assert again == got
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
     root = jvm.org.apache.hadoop.fs.Path(path)
     if fs.exists(root):
         fs.delete(root, True)

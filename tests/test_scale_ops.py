@@ -193,9 +193,9 @@ def test_khop_bucketed_matches_and_is_exchange_free_on_edges(spark, sf_dir):
     frontier exchanges per hop."""
     from cell_kn_mvp_etl_results_spark.plans import graph_queries as gq
 
-    gq.materialize_khop_bucketed(spark, sf_dir, num_buckets=4, prefix="khop_t")
+    tables = gq.materialize_khop_bucketed(spark, sf_dir, num_buckets=4)
     want = sorted(map(tuple, gq.q_khop_paths(spark, sf_dir).collect()))
-    got_df = gq.khop_paths_bucketed(spark, sf_dir, prefix="khop_t")
+    got_df = gq.khop_paths_bucketed(spark, sf_dir, tables)
     assert sorted(map(tuple, got_df.collect())) == want
     assert len(want) > 0
 
@@ -203,7 +203,7 @@ def test_khop_bucketed_matches_and_is_exchange_free_on_edges(spark, sf_dir):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         plan = (
-            gq.khop_paths_bucketed(spark, sf_dir, prefix="khop_t")
+            gq.khop_paths_bucketed(spark, sf_dir, tables)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -213,7 +213,7 @@ def test_khop_bucketed_matches_and_is_exchange_free_on_edges(spark, sf_dir):
     lines = plan.splitlines()
     scans = [
         i for i, ln in enumerate(lines)
-        if "FileScan parquet" in ln and "khop_t_" in ln
+        if "FileScan parquet" in ln and "khop_" in ln
     ]
     assert len(scans) == 3
     assert plan.count("Bucketed: true") == 3

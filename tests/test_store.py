@@ -5,13 +5,21 @@
   checkpoints and temp views before rebuilding, so nothing accumulates.
 * The store is the only holder of serving state: no other package
   module reads the store's switches or keeps a module-level memo.
+* plans/materialized.py is the only module that writes or recovers a
+  warehouse table, and store.tag the only fingerprint-name hash.
+* A frame persisted over a file never serves the file's old rows after
+  the file is rewritten.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import shutil
 
+import duckdb
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql.catalog import Catalog
 
@@ -26,6 +34,14 @@ SWITCH_VARS = {
     "SPARK_GRAFT_PLAN_CACHE",
 }
 HEADLINERS = sorted(n for n, s in REGISTRY.items() if s.headline)
+# Queries whose first store-off call must keep its state for one
+# generation (released by the second call).
+PINS_ONE_GENERATION = (
+    "q_khop_paths",
+    "q_dedup_minhash_lsh",
+    "q_cosine_topk",
+    "q_modularity",
+)
 
 
 def _store_off() -> dict:
@@ -53,7 +69,7 @@ def test_headliners_are_the_six():
     assert len(HEADLINERS) == 6
 
 
-@pytest.mark.parametrize("name", HEADLINERS)
+@pytest.mark.parametrize("name", HEADLINERS + ["q_modularity"])
 def test_store_off_second_call_recomputes(spark, sf_dir, monkeypatch, name):
     for k, v in _store_off().items():
         monkeypatch.setenv(k, v)
@@ -77,7 +93,7 @@ def test_store_off_second_call_recomputes(spark, sf_dir, monkeypatch, name):
     rdds1 = [r.id() for e in pinned1 for r in e.rdds]
     views1 = [n for e in pinned1 for _s, n in e.views]
     assert all(df.is_cached for df in frames1)
-    if name in ("q_khop_paths", "q_dedup_minhash_lsh", "q_cosine_topk"):
+    if name in PINS_ONE_GENERATION:
         assert pinned1, "the first call keeps its state for one generation"
     dropped.clear()
 
@@ -155,3 +171,59 @@ def test_only_the_store_holds_serving_state():
                         memos.append(f"{rel}:{node.lineno} {t.id}")
     assert readers == [], "read the switches through store.regime()"
     assert memos == [], "keep serving state in store.get entries"
+
+
+def _calls(tree) -> set:
+    """Names of the functions a module calls."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            out.add(getattr(f, "id", None) or getattr(f, "attr", None))
+    return out
+
+
+def test_only_materialized_writes_warehouse_tables():
+    writers, hashers = [], []
+    for rel, tree in _modules():
+        if rel != os.path.join("plans", "materialized.py"):
+            called = _calls(tree) & {"write_bucketed", "register_surviving_bucketed"}
+            writers += [f"{rel} {name}" for name in sorted(called)]
+        if rel.startswith("plans" + os.sep):
+            for node in ast.walk(tree):
+                names = []
+                if isinstance(node, ast.Import):
+                    names = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom):
+                    names = [node.module or ""]
+                if "hashlib" in names:
+                    hashers.append(f"{rel}:{node.lineno}")
+    assert writers == [], "build warehouse tables through materialized.ensure_table"
+    assert hashers == [], "name fingerprint-derived state with store.tag"
+
+
+def test_rewritten_file_never_serves_persisted_rows(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """q_dedup_containment persists its shingle relation and nothing
+    unpersists it; the CacheManager matches a later read of the same
+    path to that cached plan. After the file is rewritten out of
+    process, the second call must answer from the new file."""
+    for k, v in _store_off().items():
+        monkeypatch.setenv(k, v)
+    path = str(tmp_path / "documents.parquet")
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), path)
+    query = REGISTRY["q_dedup_containment"]
+
+    def pairs(rows):
+        return sorted((r[0], r[1]) for r in rows)
+
+    first = pairs(query.builder(spark, str(tmp_path)).collect())
+    docs = pq.read_table(path)
+    even = pc.equal(pc.bit_wise_and(docs["doc_id"], 1), 0)
+    pq.write_table(docs.filter(even), path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    want = pairs(con.execute(query.oracle).fetchall())
+    assert want != first
+    assert pairs(query.builder(spark, str(tmp_path)).collect()) == want
